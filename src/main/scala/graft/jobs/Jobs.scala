@@ -3,6 +3,7 @@ package graft.jobs
 import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.annotation.tailrec
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
@@ -25,7 +26,13 @@ object Jobs {
   final class RetriesExhausted(val attempts: Int, cause: Throwable)
       extends RuntimeException(s"job failed after $attempts attempts", cause)
 
-  /** Run `job`, retrying per `policy`. `sleep` is injectable for tests. */
+  /** Run `job`, retrying per `policy`. `sleep` is injectable for tests.
+    * Only non-fatal errors are retried (and wrapped in
+    * [[RetriesExhausted]] once out of attempts or refused by
+    * `retryOn`): a fatal one — `OutOfMemoryError`, an interrupt, a
+    * linkage error — propagates as is from the attempt that raised it,
+    * since re-running a job in a dying or cancelled JVM only hides why
+    * it failed. */
   def runWithRetry[T](policy: RetryPolicy = RetryPolicy(),
                       sleep: Long => Unit = Thread.sleep)(job: => T): T = {
     @tailrec
@@ -33,8 +40,8 @@ object Jobs {
       val result =
         try Right(job)
         catch {
-          case e: Throwable if policy.retryOn(e) && n < policy.maxAttempts => Left(e)
-          case e: Throwable => throw new RetriesExhausted(n, e)
+          case NonFatal(e) if policy.retryOn(e) && n < policy.maxAttempts => Left(e)
+          case NonFatal(e) => throw new RetriesExhausted(n, e)
         }
       result match {
         case Right(v) => v

@@ -3029,16 +3029,18 @@ object Etl {
     fmt.commit(spark, table, slim, "a56")
     fmt.erase(spark, table, col("o_orderkey") % 97 === 0, "a56e")
     spark.read.format("graft").load(table).createOrReplaceTempView("a56_lake")
+    // the predicate stays on the DECIMAL column (the pruning under
+    // test); only the OUTPUT is DOUBLE, the suite's result-type rule
     spark.sql(
-      """SELECT o_orderkey, o_price FROM a56_lake
+      """SELECT o_orderkey, CAST(o_price AS DOUBLE) AS o_price FROM a56_lake
         |WHERE o_price BETWEEN 100.00 AND 700.99
         |ORDER BY o_orderkey""".stripMargin)
   }
 
   val a56Sql: String =
     """SELECT o_orderkey,
-      |  CAST(CAST(o_orderkey * 100 + o_custkey % 100 AS DECIMAL(14,0))
-      |    * 0.01 AS DECIMAL(12,2)) AS o_price
+      |  CAST(CAST(CAST(o_orderkey * 100 + o_custkey % 100 AS DECIMAL(14,0))
+      |    * 0.01 AS DECIMAL(12,2)) AS DOUBLE) AS o_price
       |FROM orders
       |WHERE o_orderkey BETWEEN 100 AND 700 AND o_orderkey % 97 <> 0
       |ORDER BY o_orderkey""".stripMargin

@@ -146,11 +146,15 @@ case class LakeSnapshot(version: Long, root: String,
   * stay valid across appends and table relocation alike.
   *
   * DELETION VECTORS (merge-on-read row deletes): [[erase]] hides rows
-  * matching a predicate WITHOUT rewriting any data file — it computes
-  * the matching rows' physical positions (parquet file name +
-  * `_metadata.row_index`), unions them into the prior DV, writes the
-  * result as a small parquet sidecar, and publishes a new version
-  * whose entry references the SAME data dir plus the new DV. The read
+  * matching a predicate WITHOUT rewriting any data file — it finds the
+  * matching LIVE rows' physical positions (parquet file key +
+  * `_metadata.row_index`; the prior DV is anti-joined out first, so
+  * the new hits are disjoint from it by construction), writes the
+  * prior DV plus those hits ONCE as a small parquet sidecar of the
+  * fixed [[DvSchema]], and publishes a new version whose entry
+  * references the SAME data dirs plus the new DV. Disjointness makes
+  * the newly hidden count the sidecar's footer row count minus the
+  * prior's — no distinct, no persist, no counting job. The read
   * path subtracts the DV with an anti-join on (file, pos) — the DV
   * side is bounded by the deleted row count, so AQE picks a broadcast
   * at runtime for the GDPR-scale case. Time travel still resolves the
@@ -210,15 +214,45 @@ object CommitLogTableFormat extends TableFormat {
     }
   }
 
-  /** A resolved snapshot reference: the data dirs (one per full
-    * rewrite, one PER APPEND since — entry line 1, space-separated)
-    * plus the optional deletion-vector sidecar (entry line 2). */
-  private case class Snap(dataNames: Seq[String], dvName: Option[String])
-
-  private def parseSnap(content: String): Snap = {
+  /** Version `v` of `table` from its log entry: the data dirs (one per
+    * full rewrite, one PER APPEND since — entry line 1,
+    * space-separated) plus the optional deletion-vector sidecar (entry
+    * line 2). */
+  private def parseSnap(table: String, v: Long, content: String): LakeSnapshot = {
     val lines = content.split('\n').map(_.trim).filter(_.nonEmpty)
-    Snap(lines(0).split("\\s+").toSeq.filter(_.nonEmpty), lines.lift(1))
+    LakeSnapshot(v, table, lines(0).split("\\s+").toSeq.filter(_.nonEmpty), lines.lift(1))
   }
+
+  /** Schema of every deletion-vector sidecar, exactly as [[writeDv]]
+    * writes it: `file` = [[FileKeyExpr]], `pos` = `_metadata.row_index`.
+    * DV reads pass it explicitly — inferring it costs a Spark job. */
+  private[sources] val DvSchema: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("file", org.apache.spark.sql.types.StringType),
+      org.apache.spark.sql.types.StructField("pos", org.apache.spark.sql.types.LongType)))
+
+  private def readDv(spark: SparkSession, dv: String): DataFrame =
+    spark.read.schema(DvSchema).parquet(dv)
+
+  /** `dirs` of `snapshot` read with the snapshot's cached union schema
+    * ([[snapshotSchema]]): NULL backfill for a column a dir lacks, the
+    * mergeSchema contract, without re-inferring it per read. */
+  private def readDirs(spark: SparkSession, snapshot: LakeSnapshot,
+                       dirs: Seq[String]): DataFrame =
+    spark.read.schema(snapshotSchema(spark, snapshot))
+      .parquet(dirs.map(n => new Path(new Path(snapshot.root), n).toString): _*)
+
+  /** `data` plus its physical row identity (`__graft_file`,
+    * `__graft_pos`), the key deletion vectors join on. */
+  private def withRowKey(data: DataFrame): DataFrame =
+    data.withColumn("__graft_file", org.apache.spark.sql.functions.expr(FileKeyExpr))
+      .withColumn("__graft_pos", org.apache.spark.sql.functions.col("_metadata.row_index"))
+
+  /** The rows of a [[withRowKey]] frame that `dv` does not hide. */
+  private def minusDv(keyed: DataFrame, dv: DataFrame): DataFrame =
+    keyed.join(dv,
+      keyed("__graft_file") === dv("file") && keyed("__graft_pos") === dv("pos"),
+      "left_anti")
 
   /** The physical row identity the deletion vectors key on:
     * `<data dir name>/<file name>` — dir-qualified because an appended
@@ -229,55 +263,38 @@ object CommitLogTableFormat extends TableFormat {
 
   /** Merge-on-read: the data dirs' rows minus the DV's (file, pos)
     * set. The hidden `_metadata` parquet columns provide the physical
-    * identity. `mergeSchema` makes APPEND-time schema evolution a
-    * first-class read contract (the Delta/Iceberg add-column
-    * semantics): an appended dir may carry columns the older dirs
-    * lack — readers see the union schema with NULL backfill for rows
-    * predating the column, instead of whichever single file schema
-    * the planner happened to sample. Cost is one footer read per
-    * file, run distributed by the datasource — the same footers the
-    * zone map already touches. */
-  private def resolve(spark: SparkSession, table: String, snap: Snap): DataFrame = {
-    val data = spark.read.option("mergeSchema", "true").parquet(
-      snap.dataNames.map(n => new Path(new Path(table), n).toString): _*)
-    snap.dvName match {
+    * identity. The snapshot's mergeSchema UNION schema makes
+    * APPEND-time schema evolution a first-class read contract (the
+    * Delta/Iceberg add-column semantics): an appended dir may carry
+    * columns the older dirs lack — readers see the union schema with
+    * NULL backfill for rows predating the column, instead of whichever
+    * single file schema the planner happened to sample. The union is
+    * inferred once per committed version ([[snapshotSchema]]'s cache),
+    * not per read. */
+  private def resolve(spark: SparkSession, snapshot: LakeSnapshot): DataFrame = {
+    val data = readDirs(spark, snapshot, snapshot.dataDirNames)
+    snapshot.dvPath match {
       case None => data
-      case Some(dvName) =>
-        val dv = spark.read.parquet(new Path(new Path(table), dvName).toString)
-        val keyed = data
-          .withColumn("__graft_file",
-            org.apache.spark.sql.functions.expr(FileKeyExpr))
-          .withColumn("__graft_pos",
-            org.apache.spark.sql.functions.col("_metadata.row_index"))
-        keyed.join(dv,
-            keyed("__graft_file") === dv("file") && keyed("__graft_pos") === dv("pos"),
-            "left_anti")
-          .drop("__graft_file", "__graft_pos")
+      case Some(dv) =>
+        minusDv(withRowKey(data), readDv(spark, dv)).drop("__graft_file", "__graft_pos")
     }
   }
 
   /** Every data file of a snapshot, across all of its dirs. */
-  private def snapFiles(fs: FileSystem, table: String, snap: Snap): Seq[String] =
-    snap.dataNames.flatMap(n =>
-      ParquetFooters.dataFiles(fs, new Path(new Path(table), n)))
+  private def snapFiles(fs: FileSystem, snap: LakeSnapshot): Seq[String] =
+    snap.dataDirNames.flatMap(n =>
+      ParquetFooters.dataFiles(fs, new Path(new Path(snap.root), n)))
 
-  override def read(spark: SparkSession, table: String): Option[DataFrame] = {
-    val fs = fsOf(spark, table)
-    latest(fs, table).map { case (_, content) =>
-      resolve(spark, table, parseSnap(content))
-    }
-  }
+  override def read(spark: SparkSession, table: String): Option[DataFrame] =
+    currentSnapshot(spark, table).map(resolve(spark, _))
 
   /** The current committed snapshot's physical layout — the resolve
     * step the DSv2 connector plans from. One log read; see
     * [[LakeSnapshot]] for the isolation argument. */
-  def currentSnapshot(spark: SparkSession, table: String): Option[LakeSnapshot] = {
-    val fs = fsOf(spark, table)
-    latest(fs, table).map { case (v, content) =>
-      val snap = parseSnap(content)
-      LakeSnapshot(v, table, snap.dataNames, snap.dvName)
+  def currentSnapshot(spark: SparkSession, table: String): Option[LakeSnapshot] =
+    latest(fsOf(spark, table), table).map { case (v, content) =>
+      parseSnap(table, v, content)
     }
-  }
 
   /** [[currentSnapshot]] pinned to an explicit VERSION still inside
     * the retention window — the DSv2 time-travel resolution hook
@@ -287,8 +304,7 @@ object CommitLogTableFormat extends TableFormat {
     val fs = fsOf(spark, table)
     val entry = new Path(new Path(table, LogDirName), version.toString)
     if (!fs.exists(entry)) None
-    else Some(entryContent(fs, entry)).filter(_.nonEmpty).map(parseSnap)
-      .map(s => LakeSnapshot(version, table, s.dataNames, s.dvName))
+    else Some(entryContent(fs, entry)).filter(_.nonEmpty).map(parseSnap(table, version, _))
   }
 
   /** All data files (full paths, sorted) of a resolved snapshot —
@@ -299,21 +315,29 @@ object CommitLogTableFormat extends TableFormat {
 
   // ---- driver-side SNAPSHOT METADATA CACHE (the Delta DeltaLog-cache
   // posture): a committed version's dirs are immutable, so its union
-  // schema and per-file stats never change — yet before round 14 every
-  // `spark.read.format("graft")` paid a mergeSchema FOOTER JOB to
-  // re-infer the schema and every pushed-filter scan re-read the
-  // `_stats` sidecars as a fresh Spark job. Per-query planning cost
-  // must be O(driver metadata), not O(jobs): at 100 TB the jobs are
-  // noise, but on the interactive path they dominate small scans. The
-  // key carries the log entry's COMMIT-INSTANT mtime AND length plus a
-  // hash of the snapshot's physical layout, so a table that is deleted
-  // and recreated at the same path+version (the test-fixture pattern)
-  // can never serve stale metadata: mtime alone is coarse on 1-second
-  // granularity stores, but a recreate mints fresh random dir tokens
-  // (`data-v<N>-<token>`), so the layout hash separates incarnations
-  // even inside one mtime tick. A failed stat returns NO key — callers
-  // bypass the cache — because a shared -1 sentinel would let two
-  // unrelated incarnations collide on one cache slot.
+  // schema, file list, file sizes, per-file stats and DV-hit files never
+  // change — yet before round 14 every `spark.read.format("graft")` paid
+  // a mergeSchema FOOTER JOB to re-infer the schema and every
+  // pushed-filter scan re-read the `_stats` sidecars as a fresh Spark
+  // job. Per-query planning cost must be O(driver metadata), not
+  // O(jobs): at 100 TB the jobs are noise, but on the interactive path
+  // they dominate small scans. The same holds for the WRITE path: every
+  // commit of this JVM SEEDS the caches for the version it just
+  // published ([[seedMeta]]), from the prior version's entries plus
+  // what the commit itself wrote, so the first read of a new version
+  // pays no metadata job either — and the erase/upsert/compaction hit
+  // scans read the prior version's schema from here instead of
+  // inferring it. The key carries the log entry's COMMIT-INSTANT mtime
+  // AND length plus a hash of the snapshot's physical layout, so a
+  // table that is deleted and recreated at the same path+version (the
+  // test-fixture pattern) can never serve stale metadata: mtime alone
+  // is coarse on 1-second granularity stores, but a recreate mints
+  // fresh random dir tokens (`data-v<N>-<token>`), so the layout hash
+  // separates incarnations even inside one mtime tick. The root is
+  // QUALIFIED, so a catalog table whose location carries a scheme and a
+  // path-addressed read of the same table share entries. A failed stat
+  // returns NO key — callers bypass the cache — because a shared -1
+  // sentinel would let two unrelated incarnations collide on one slot.
   private case class SnapCacheKey(root: String, version: Long, stamp: Long,
                                   len: Long, layout: Int)
 
@@ -324,8 +348,8 @@ object CommitLogTableFormat extends TableFormat {
       val st = fs.getFileStatus(entry)
       val layout = scala.util.hashing.MurmurHash3.orderedHash(
         snapshot.dataDirNames :+ snapshot.dvName.getOrElse(""))
-      Some(SnapCacheKey(snapshot.root, snapshot.version,
-        st.getModificationTime, st.getLen, layout))
+      Some(SnapCacheKey(fs.makeQualified(new Path(snapshot.root)).toString,
+        snapshot.version, st.getModificationTime, st.getLen, layout))
     } catch { case _: java.io.IOException => None }
   }
 
@@ -346,14 +370,21 @@ object CommitLogTableFormat extends TableFormat {
         if (hit != null) hit
         else {
           val v = compute
-          if (cache.size > max) cache.clear()
-          cache.put(k, v)
+          put(cache, k, v, max)
           v
         }
     }
 
+  private def put[V](cache: java.util.concurrent.ConcurrentHashMap[SnapCacheKey, V],
+                     k: SnapCacheKey, v: V, max: Int): Unit = {
+    if (cache.size > max) cache.clear()
+    cache.put(k, v)
+  }
+
   /** The snapshot's mergeSchema union schema, computed once per
-    * committed version (then a driver map hit). */
+    * committed version (then a driver map hit) — or seeded by the
+    * commit that published it, when that commit can derive it exactly
+    * ([[seedMeta]]). */
   def snapshotSchema(spark: SparkSession,
                      snapshot: LakeSnapshot): org.apache.spark.sql.types.StructType =
     cachedBy(schemaCache, snapCacheKey(fsOf(spark, snapshot.root), snapshot), 256) {
@@ -472,14 +503,55 @@ object CommitLogTableFormat extends TableFormat {
     * snapshots. Clustered single-digit parts give O(N) opens and
     * row-group stats that actually skip foreign files' blocks. The
     * range shuffle is O(DV rows) at WRITE time — deleted rows, not
-    * data — bought once per erase/upsert. */
-  private def writeDv(dv: DataFrame, target: Path): Unit = {
+    * data — bought once per erase/upsert, in the ONE job that writes:
+    * the part count comes from the prior sidecar's footer row count
+    * (`priorRows`, one part per 4 M rows), not from counting `dv`, so
+    * a single call that adds more than 4 M rows lands in the prior's
+    * part count and the next write re-splits it. */
+  private def writeDv(dv: DataFrame, target: Path, priorRows: Long): Unit = {
     import org.apache.spark.sql.functions.col
-    val rows = dv.count()
-    val parts = math.max(1L, rows / 4000000L).toInt
+    val parts = math.max(1L, priorRows / 4000000L).toInt
     dv.repartitionByRange(parts, col("file"), col("pos"))
       .sortWithinPartitions(col("file"), col("pos"))
       .write.mode("overwrite").parquet(target.toString)
+  }
+
+  /** Row count and file keys of a DV sidecar, read on the driver from
+    * its parquet metadata alone: footer row counts, and the `file`
+    * column's DICTIONARY pages. The key set is exact when every data
+    * page of the column is dictionary-encoded — the dictionary then
+    * holds exactly the values written — and None otherwise (an
+    * overflowing dictionary falls back to plain pages it does not
+    * list) or when the footer lacks the encoding stats to tell. */
+  private def dvSidecarMeta(conf: Configuration, dir: Path): (Long, Option[Set[String]]) = {
+    import scala.jdk.CollectionConverters._
+    ParquetFooters.dataFiles(dir.getFileSystem(conf), dir).map { p =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(p), conf))
+      try {
+        val desc = r.getFooter.getFileMetaData.getSchema.getColumnDescription(Array("file"))
+        val blocks = r.getFooter.getBlocks.asScala.toSeq
+        val keys = blocks.foldLeft(Option(Set.empty[String])) { (acc, b) =>
+          acc.flatMap { seen =>
+            b.getColumns.asScala.find(_.getPath.toDotString == "file")
+              .filter(c => c.getEncodingStats != null &&
+                !c.getEncodingStats.hasNonDictionaryEncodedPages)
+              .flatMap { _ =>
+                val store: org.apache.parquet.column.page.DictionaryPageReadStore =
+                  r.getDictionaryReader(b)
+                Option(store.readDictionaryPage(desc))
+              }
+              .map { page =>
+                val dict = page.getEncoding.initDictionary(desc, page)
+                seen ++ (0 to dict.getMaxId).map(dict.decodeToBinary(_).toStringUsingUTF8)
+              }
+          }
+        }
+        (blocks.map(_.getRowCount).sum, keys)
+      } finally r.close()
+    }.foldLeft((0L, Option(Set.empty[String]))) { case ((n, acc), (m, keys)) =>
+      (n + m, for (a <- acc; k <- keys) yield a ++ k)
+    }
   }
 
   /** xxhash64 of `value` CAST to `keyType`, evaluated DRIVER-SIDE (no
@@ -508,16 +580,9 @@ object CommitLogTableFormat extends TableFormat {
     * This is what the log layout buys over rename-in-place — an
     * auditor can diff the current snapshot against the previous one
     * (the a21 snapshot-diff input) without racing the writer. */
-  def readVersion(spark: SparkSession, table: String, version: Long): Option[DataFrame] = {
-    val fs = fsOf(spark, table)
-    val entry = new Path(new Path(table, LogDirName), version.toString)
-    if (!fs.exists(entry)) None
-    else {
-      val content = entryContent(fs, entry)
-      if (content.isEmpty) None // crashed legacy commit, never published
-      else Some(resolve(spark, table, parseSnap(content)))
-    }
-  }
+  def readVersion(spark: SparkSession, table: String, version: Long): Option[DataFrame] =
+    // an empty entry is a crashed legacy commit, never published
+    snapshotAt(spark, table, version).map(resolve(spark, _))
 
   /** CHANGE FEED: the net row-level changes between two retained
     * versions, as the snapshot columns plus `_change_type`
@@ -540,55 +605,51 @@ object CommitLogTableFormat extends TableFormat {
     * whole-table churn — Delta's CDF refuses the same way. */
   def changesBetween(spark: SparkSession, table: String,
                      fromVersion: Long, toVersion: Long): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{col, expr, lit}
+    import org.apache.spark.sql.functions.lit
     require(fromVersion < toVersion,
       s"changesBetween needs fromVersion < toVersion, got $fromVersion >= $toVersion")
     val root = new Path(table)
-    val fs = fsOf(spark, table)
-    def snapOf(v: Long): Option[Snap] = {
-      val entry = new Path(new Path(table, LogDirName), v.toString)
-      if (!fs.exists(entry)) None
-      else Some(entryContent(fs, entry)).filter(_.nonEmpty).map(parseSnap)
-    }
-    for (fromSnap <- snapOf(fromVersion); toSnap <- snapOf(toVersion)) yield {
-      if (!fromSnap.dataNames.forall(toSnap.dataNames.contains))
+    for (fromSnap <- snapshotAt(spark, table, fromVersion);
+         toSnap <- snapshotAt(spark, table, toVersion)) yield {
+      if (!fromSnap.dataDirNames.forall(toSnap.dataDirNames.contains))
         throw new IllegalArgumentException(
           s"version $toVersion of $root rewrote data dirs committed at " +
             s"$fromVersion — a rewrite breaks row identity, so no " +
             "incremental change feed exists between these versions")
-      val toDv = toSnap.dvName.map(n =>
-        spark.read.parquet(new Path(root, n).toString))
-      val fromDv = fromSnap.dvName.map(n =>
-        spark.read.parquet(new Path(root, n).toString))
-      def keyed(dirs: Seq[String]): DataFrame =
-        spark.read.option("mergeSchema", "true")
-          .parquet(dirs.map(n => new Path(root, n).toString): _*)
-          .withColumn("__graft_file", expr(FileKeyExpr))
-          .withColumn("__graft_pos", col("_metadata.row_index"))
-      def against(df: DataFrame, dv: DataFrame, how: String): DataFrame =
-        df.join(dv, df("__graft_file") === dv("file") &&
-            df("__graft_pos") === dv("pos"), how)
-          .drop("__graft_file", "__graft_pos", "file", "pos")
-      val newDirs = toSnap.dataNames.filterNot(fromSnap.dataNames.contains)
+      val toDv = toSnap.dvPath.map(readDv(spark, _))
+      val fromDv = fromSnap.dvPath.map(readDv(spark, _))
+      val newDirs = toSnap.dataDirNames.filterNot(fromSnap.dataDirNames.contains)
       val inserts = (newDirs, toDv) match {
         case (Nil, _) => None
-        case (dirs, None) =>
-          Some(keyed(dirs).drop("__graft_file", "__graft_pos"))
-        case (dirs, Some(dv)) => Some(against(keyed(dirs), dv, "left_anti"))
+        case (dirs, dv) =>
+          // the new dirs' own union schema: read from their footers when
+          // they all share one, inferred (a job) only across an evolution
+          val reader = dirs.map(dirSchema(spark, root, _)).distinct match {
+            case Seq(Some(s)) => spark.read.schema(s)
+            case _ => spark.read.option("mergeSchema", "true")
+          }
+          val data = reader.parquet(dirs.map(n => new Path(root, n).toString): _*)
+          Some(dv.fold(data)(minusDv(withRowKey(data), _).drop("__graft_file", "__graft_pos")))
       }
       val dvDelta = (toDv, fromDv) match {
         case (None, _) => None
         case (Some(t), None) => Some(t)
-        case (Some(t), Some(f)) => Some(t.exceptAll(f))
+        // DV rows are unique (each write stages hits disjoint from the
+        // prior DV), so the multiset difference is a plain anti join
+        case (Some(t), Some(f)) => Some(t.join(f, Seq("file", "pos"), "left_anti"))
       }
-      val deletes = dvDelta.map(delta =>
-        against(keyed(fromSnap.dataNames), delta, "left_semi"))
+      val deletes = dvDelta.map { delta =>
+        val keyed = withRowKey(readDirs(spark, fromSnap, fromSnap.dataDirNames))
+        keyed.join(delta, keyed("__graft_file") === delta("file") &&
+            keyed("__graft_pos") === delta("pos"), "left_semi")
+          .drop("__graft_file", "__graft_pos")
+      }
       val tagged =
         inserts.map(_.withColumn("_change_type", lit("insert"))).toSeq ++
           deletes.map(_.withColumn("_change_type", lit("delete"))).toSeq
       tagged.reduceOption(_ unionByName (_, allowMissingColumns = true))
         .getOrElse {
-          keyed(toSnap.dataNames).drop("__graft_file", "__graft_pos")
+          readDirs(spark, toSnap, toSnap.dataDirNames)
             .limit(0).withColumn("_change_type", lit("insert"))
         }
     }
@@ -626,7 +687,11 @@ object CommitLogTableFormat extends TableFormat {
     * dir grain. The new entry lists the surviving dirs plus the merged
     * dir; the surviving dirs' DV rows ride along (re-written as a new
     * sidecar only when the rewritten dirs actually had hits to drop —
-    * otherwise the prior sidecar name is carried forward unchanged).
+    * otherwise the prior sidecar name is carried forward unchanged;
+    * which dirs hold hits comes from [[dvHitFiles]], not a counting
+    * job). The rewritten rows are read with the snapshot's union
+    * schema, so the merged dir carries every union column (NULL where
+    * its source dir lacked one) and the union itself is unchanged.
     * `coalesce` (narrow) does the rewrite — no corpus exchange. Same
     * one-rename publish: a concurrent commit wins the race and this
     * compaction throws [[ConcurrentCommitException]]. Returns the new
@@ -643,36 +708,30 @@ object CommitLogTableFormat extends TableFormat {
     val root = new Path(table)
     val fs = fsOf(spark, table)
     recoverLatest(fs, table).map { case (v, content) =>
-      val snap = parseSnap(content)
-      val unknown = dirs.filterNot(snap.dataNames.contains)
+      val snap = parseSnap(table, v, content)
+      val unknown = dirs.filterNot(snap.dataDirNames.contains)
       require(unknown.isEmpty,
         s"compactDirs: ${unknown.mkString(", ")} not in the current " +
-          s"snapshot of $root (dirs: ${snap.dataNames.mkString(", ")})")
-      val rewrite = snap.dataNames.filter(dirs.contains)
-      val survive = snap.dataNames.filterNot(dirs.contains)
+          s"snapshot of $root (dirs: ${snap.dataDirNames.mkString(", ")})")
+      val rewrite = snap.dataDirNames.filter(dirs.contains)
+      val survive = snap.dataDirNames.filterNot(dirs.contains)
       val nv = v + 1
       val dataName = s"data-v$nv-$token"
       val dvName = s"dv-v$nv-$token"
+      // which dirs the DV touches, from the (cached) DV-hit file keys —
+      // driver metadata, no counting job over the sidecar
+      val hitDirs = dvHitFiles(spark, snap).map(_.takeWhile(_ != '/'))
+      def dvRowsIn(in: Seq[String]): DataFrame =
+        readDv(spark, snap.dvPath.get).filter(expr("substring_index(file, '/', 1)").isin(in: _*))
       // fold the rewritten dirs' DV hits IN: the merged dir holds the
       // LIVE rows only, so those erasures become physical (the same
-      // purge contract as full compact) — mergeSchema because the
-      // rewritten set may span an append-time schema evolution
-      val src = spark.read.option("mergeSchema", "true")
-        .parquet(rewrite.map(n => new Path(root, n).toString): _*)
-      val dv = snap.dvName.map(n =>
-        spark.read.parquet(new Path(root, n).toString))
-      val rewriteDv = dv.map(_.filter(
-        expr("substring_index(file, '/', 1)").isin(rewrite: _*)))
-      val purged = rewriteDv match {
-        case None => src
-        case Some(hits) =>
-          val keyed = src
-            .withColumn("__graft_file", expr(FileKeyExpr))
-            .withColumn("__graft_pos", col("_metadata.row_index"))
-          keyed.join(hits, keyed("__graft_file") === hits("file") &&
-              keyed("__graft_pos") === hits("pos"), "left_anti")
-            .drop("__graft_file", "__graft_pos")
-      }
+      // purge contract as full compact) — read with the snapshot's
+      // union schema because the rewritten set may span an append-time
+      // schema evolution
+      val src = readDirs(spark, snap, rewrite)
+      val purged =
+        if (!rewrite.exists(hitDirs)) src
+        else minusDv(withRowKey(src), dvRowsIn(rewrite)).drop("__graft_file", "__graft_pos")
       // RECLUSTER-ON-COMPACT (Delta OPTIMIZE ZORDER parity, r13 verdict
       // missing #6): a plain compact preserves arrival order, so the
       // merged dir's zone maps stay as loose as the inputs'. With
@@ -701,35 +760,27 @@ object CommitLogTableFormat extends TableFormat {
       }
       rewritten.write.mode("overwrite")
         .parquet(new Path(root, dataName).toString)
-      writeDirStats(spark, root, dataName)
+      val stats = writeDirStats(spark, root, dataName)
       // the surviving dirs' DV rows are still live erasures; rewrite
       // the sidecar only when folding actually dropped rows from it
-      val (entryDv, orphanDv) = dv match {
-        case None => (None, Seq.empty[Path])
-        case Some(d) =>
-          val survives = d.filter(
-            expr("substring_index(file, '/', 1)").isin(survive: _*))
-          val agg = d.agg(
-            org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)),
-            org.apache.spark.sql.functions.count_if(
-              expr("substring_index(file, '/', 1)").isin(survive: _*))).head()
-          val (total, surviving) = (agg.getLong(0), agg.getLong(1))
-          if (surviving == total) (snap.dvName, Seq.empty[Path]) // untouched: carry forward
-          else if (surviving == 0L) (None, Seq.empty[Path])      // fully folded in
-          else {
-            writeDv(survives, new Path(root, dvName))
-            (Some(dvName), Seq(new Path(root, dvName)))
-          }
-      }
-      val newDirs = survive :+ dataName
-      val newContent = newDirs.mkString(" ") +
-        entryDv.map(n => s"\n$n").getOrElse("")
+      val (entryDv, dvKeys) =
+        if (!hitDirs.exists(rewrite.contains)) (snap.dvName, None) // untouched: carry forward
+        else if (!hitDirs.exists(survive.contains)) (None, None)   // fully folded in
+        else {
+          val staged = new Path(root, dvName)
+          writeDv(dvRowsIn(survive), staged, parquetRowCount(
+            spark.sparkContext.hadoopConfiguration, new Path(snap.dvPath.get)))
+          (Some(dvName), dvSidecarMeta(spark.sparkContext.hadoopConfiguration, staged)._2)
+        }
+      val next = LakeSnapshot(nv, table, survive :+ dataName, entryDv)
       // surviving dirs' blooms stay valid; only the merged dir re-aggregates
       val pending = stageBloomAdvance(spark, root, v, nv,
         survive, Seq(dataName))
-      publish(fs, root, nv, newContent, token,
-        (new Path(root, dataName) +: orphanDv) ++ pending.map(_._1))
+      publish(fs, root, nv, entryOf(next), token,
+        (new Path(root, dataName) +: entryDv.filter(_ == dvName).map(new Path(root, _)).toSeq) ++
+          pending.map(_._1))
       commitBloomAdvance(fs, root, pending, nv)
+      seedMeta(spark, Some(snap), next, stats, dvKeys)
       nv
     }
   }
@@ -920,8 +971,9 @@ object CommitLogTableFormat extends TableFormat {
     // snapshot first — invisible until logged; `df` may lazily read
     // the current version, whose files are immutable, so no conflict
     df.write.mode("overwrite").parquet(new Path(root, dataName).toString)
-    writeDirStats(spark, root, dataName)
+    val stats = writeDirStats(spark, root, dataName)
     publish(fs, root, v, dataName, token, Seq(new Path(root, dataName)))
+    seedMeta(spark, None, LakeSnapshot(v, table, Seq(dataName), None), stats, None)
   }
 
   /** INCREMENTAL ingest: append `df` as a new data dir WITHOUT
@@ -939,24 +991,36 @@ object CommitLogTableFormat extends TableFormat {
              token: String): Long = {
     val root = new Path(table)
     val fs = fsOf(spark, table)
-    val prior = recoverLatest(fs, table)
-    val v = prior.map(_._1).getOrElse(0L) + 1L
-    val priorSnap = prior.map(p => parseSnap(p._2))
+    val prior = recoverLatest(fs, table).map { case (pv, c) => parseSnap(table, pv, c) }
+    val v = prior.map(_.version).getOrElse(0L) + 1L
     val dataName = s"data-v$v-$token"
     df.write.mode("overwrite").parquet(new Path(root, dataName).toString)
-    writeDirStats(spark, root, dataName)
-    val dirs = priorSnap.map(_.dataNames).getOrElse(Seq.empty) :+ dataName
-    val content = dirs.mkString(" ") +
-      priorSnap.flatMap(_.dvName).map(dv => s"\n$dv").getOrElse("")
-    // keep any Bloom index LIVE across the append: reuse prior files'
-    // blooms, aggregate only the new dir, pin to the new version
-    val pending = prior.map(p => stageBloomAdvance(spark, root, p._1, v,
-      parseSnap(p._2).dataNames, Seq(dataName))).getOrElse(Seq.empty)
-    publish(fs, root, v, content, token,
-      new Path(root, dataName) +: pending.map(_._1))
-    commitBloomAdvance(fs, root, pending, v)
+    publishAppend(spark, table, prior, v, dataName, token, writeDirStats(spark, root, dataName))
     v
   }
+
+  /** Publish version `v` = `prior`'s dirs plus the staged `dataName`,
+    * carrying the prior DV forward (its dir-qualified keys still name
+    * exactly the same rows) — the tail [[append]] and [[appendChecked]]
+    * share. Keeps any Bloom index LIVE across the append: prior files'
+    * blooms are reused, only the new dir aggregates. */
+  private def publishAppend(spark: SparkSession, table: String, prior: Option[LakeSnapshot],
+                            v: Long, dataName: String, token: String,
+                            stats: Option[Map[String, ParquetFooters.FileColStats]]): Unit = {
+    val root = new Path(table)
+    val next = LakeSnapshot(v, table,
+      prior.fold(Seq.empty[String])(_.dataDirNames) :+ dataName, prior.flatMap(_.dvName))
+    val pending = prior.map(p => stageBloomAdvance(spark, root, p.version, v,
+      p.dataDirNames, Seq(dataName))).getOrElse(Seq.empty)
+    val fs = fsOf(spark, table)
+    publish(fs, root, v, entryOf(next), token, new Path(root, dataName) +: pending.map(_._1))
+    commitBloomAdvance(fs, root, pending, v)
+    seedMeta(spark, prior, next, stats, None)
+  }
+
+  /** A snapshot's log entry content: its dirs, then its DV (if any). */
+  private def entryOf(snapshot: LakeSnapshot): String =
+    snapshot.dataDirNames.mkString(" ") + snapshot.dvName.map(n => s"\n$n").getOrElse("")
 
   /** [[append]] exactly once per `token`: skipped when the LATEST
     * entry's newest dir already carries it. This is the Delta
@@ -971,8 +1035,8 @@ object CommitLogTableFormat extends TableFormat {
   def appendIdempotent(spark: SparkSession, table: String, df: DataFrame,
                        token: String): Option[Long] = {
     val fs = fsOf(spark, table)
-    val applied = recoverLatest(fs, table).exists { case (_, content) =>
-      parseSnap(content).dataNames.lastOption
+    val applied = recoverLatest(fs, table).exists { case (v, content) =>
+      parseSnap(table, v, content).dataDirNames.lastOption
         .exists(_.replaceFirst("^data-v\\d+-", "") == token)
     }
     if (applied) None else Some(append(spark, table, df, token))
@@ -981,12 +1045,8 @@ object CommitLogTableFormat extends TableFormat {
   /** The current committed (version, snapshot), resolved together so a
     * caller can later validate a commit against exactly the state it
     * read — the read half of optimistic concurrency. */
-  def readVersioned(spark: SparkSession, table: String): Option[(Long, DataFrame)] = {
-    val fs = fsOf(spark, table)
-    latest(fs, table).map { case (v, content) =>
-      (v, resolve(spark, table, parseSnap(content)))
-    }
-  }
+  def readVersioned(spark: SparkSession, table: String): Option[(Long, DataFrame)] =
+    currentSnapshot(spark, table).map(s => (s.version, resolve(spark, s)))
 
   /** Commit `df` as the SUCCESSOR of `baseVersion` (None = first
     * commit): publishes at baseVersion+1 and throws
@@ -1010,7 +1070,7 @@ object CommitLogTableFormat extends TableFormat {
     val v = baseVersion.getOrElse(0L) + 1L
     val dataName = s"data-v$v-$token"
     df.write.mode("overwrite").parquet(new Path(root, dataName).toString)
-    writeDirStats(spark, root, dataName)
+    val stats = writeDirStats(spark, root, dataName)
     val latestNow = latest(fs, table).map(_._1)
     if (latestNow != baseVersion) {
       fs.delete(new Path(root, dataName), true)
@@ -1018,6 +1078,7 @@ object CommitLogTableFormat extends TableFormat {
         s"table $root moved from $baseVersion to $latestNow during the commit")
     }
     publish(fs, root, v, dataName, token, Seq(new Path(root, dataName)))
+    seedMeta(spark, None, LakeSnapshot(v, table, Seq(dataName), None), stats, None)
   }
 
   /** Optimistic-concurrency commit (the Delta/Iceberg retry loop):
@@ -1087,55 +1148,62 @@ object CommitLogTableFormat extends TableFormat {
   def erase(spark: SparkSession, table: String, keys: DataFrame,
             requestKeyCol: String, tableKeyCol: String, token: String): Long = {
     import org.apache.spark.sql.functions.col
+    // a semi join ignores duplicate request keys — no distinct needed
     eraseWhere(spark, table, keyed =>
-      keyed.join(keys.select(col(requestKeyCol).as(tableKeyCol)).distinct(),
+      keyed.join(keys.select(col(requestKeyCol).as(tableKeyCol)),
         Seq(tableKeyCol), "left_semi"), token)
+  }
+
+  /** The shared erase/upsert DV step: stage `snap`'s DV plus the
+    * (file, pos) of every LIVE row `hitsOf` selects as the sidecar
+    * `dvName`, written once. The hit scan reads the snapshot with
+    * its cached union schema and anti-joins the prior DV out FIRST (the
+    * [[resolve]] shape), so the new hits are disjoint from the prior DV
+    * by construction: nothing to de-duplicate, and the newly hidden
+    * count is the staged sidecar's footer row count minus the prior's.
+    * Returns (newly hidden rows, the staged sidecar's file keys when
+    * its footer proves them — [[dvSidecarMeta]]). */
+  private def stageDv(spark: SparkSession, snap: LakeSnapshot, dvName: String,
+                      hitsOf: DataFrame => DataFrame): (Long, Option[Set[String]]) = {
+    import org.apache.spark.sql.functions.col
+    val conf = spark.sparkContext.hadoopConfiguration
+    val keyed = withRowKey(readDirs(spark, snap, snap.dataDirNames))
+    val prior = snap.dvPath.map(readDv(spark, _))
+    val hits = hitsOf(prior.fold(keyed)(minusDv(keyed, _)))
+      .select(col("__graft_file").as("file"), col("__graft_pos").as("pos"))
+    val priorRows = snap.dvPath.map(p => parquetRowCount(conf, new Path(p))).getOrElse(0L)
+    val staged = new Path(new Path(snap.root), dvName)
+    writeDv(prior.fold(hits)(_.unionByName(hits)), staged, priorRows)
+    val (rows, keys) = dvSidecarMeta(conf, staged)
+    (rows - priorRows, keys)
   }
 
   private def eraseWhere(spark: SparkSession, table: String,
                          hitsOf: DataFrame => DataFrame, token: String): Long = {
-    import org.apache.spark.sql.functions.{col, expr}
     val root = new Path(table)
     val fs = fsOf(spark, table)
     recoverLatest(fs, table) match {
       case None => 0L
       case Some((v, content)) =>
-        val snap = parseSnap(content)
-        // mergeSchema: erase predicates may name a column an older dir
-        // lacks (schema evolution) — those rows read NULL and miss
-        val keyed = spark.read.option("mergeSchema", "true")
-          .parquet(snap.dataNames.map(n => new Path(root, n).toString): _*)
-          .withColumn("__graft_file", expr(FileKeyExpr))
-          .withColumn("__graft_pos", col("_metadata.row_index"))
-        val hits = hitsOf(keyed)
-          .select(col("__graft_file").as("file"), col("__graft_pos").as("pos"))
-        val prior = snap.dvName.map(n =>
-          spark.read.parquet(new Path(root, n).toString))
-        val merged = prior.map(hits.unionByName(_)).getOrElse(hits).distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val newCount = merged.count()
-          // prior DV cardinality from its parquet footers, driver-side
-          // — the sidecar is immutable and tiny relative to a Spark
-          // job round trip (metadata reads never spin up the cluster)
-          val priorCount = snap.dvName.map(n => parquetRowCount(
-            spark.sparkContext.hadoopConfiguration, new Path(root, n)))
-            .getOrElse(0L)
-          if (newCount == priorCount) 0L
-          else {
-            val nv = v + 1
-            val dvName = s"dv-v$nv-$token"
-            writeDv(merged, new Path(root, dvName))
-            // the file set is unchanged — re-pin any Bloom index to the
-            // new version verbatim (an erase must not cost a rebuild)
-            val pending = stageBloomAdvance(spark, root, v, nv,
-              snap.dataNames, Seq.empty)
-            publish(fs, root, nv, s"${snap.dataNames.mkString(" ")}\n$dvName", token,
-              new Path(root, dvName) +: pending.map(_._1))
-            commitBloomAdvance(fs, root, pending, nv)
-            newCount - priorCount
-          }
-        } finally { merged.unpersist(); () }
+        val snap = parseSnap(table, v, content)
+        val nv = v + 1
+        val dvName = s"dv-v$nv-$token"
+        val (hidden, dvKeys) = stageDv(spark, snap, dvName, hitsOf)
+        if (hidden == 0L) {
+          fs.delete(new Path(root, dvName), true)
+          0L
+        } else {
+          val next = snap.copy(version = nv, dvName = Some(dvName))
+          // the file set is unchanged — re-pin any Bloom index to the
+          // new version verbatim (an erase must not cost a rebuild)
+          val pending = stageBloomAdvance(spark, root, v, nv,
+            snap.dataDirNames, Seq.empty)
+          publish(fs, root, nv, entryOf(next), token,
+            new Path(root, dvName) +: pending.map(_._1))
+          commitBloomAdvance(fs, root, pending, nv)
+          seedMeta(spark, Some(snap), next, Some(Map.empty), dvKeys)
+          hidden
+        }
     }
   }
 
@@ -1148,63 +1216,46 @@ object CommitLogTableFormat extends TableFormat {
     * row whose `keyCol` appears in `updates` — so matched keys are
     * hidden and replaced, unmatched keys are plain inserts, and both
     * effects land under one rename (readers see neither or both).
+    * When no live row matches, the prior DV is carried forward as is.
     *
     * Cost at 100 TB: O(updates) write + ONE hit scan of the table
     * that reads only `keyCol` and the hidden `_metadata` identity
     * (column pruning does the rest — payload bytes never move), with
     * the update keys as the LEFT SEMI probe side AQE broadcasts when
-    * small. Compare `Sinks.mergeByKey`, which rewrites the full
+    * small; the DV is written in the same single job ([[stageDv]]).
+    * Compare `Sinks.mergeByKey`, which rewrites the full
     * snapshot: that remains the compaction-grade merge; this is the
     * CDC-grade one. Duplicate keys WITHIN `updates` all land —
     * `updates` is the caller's declared truth, pre-dedup it if keys
     * must be unique. Returns the count of replaced (hidden) rows. */
   def upsertByKey(spark: SparkSession, table: String, updates: DataFrame,
                   keyCol: String, token: String): Long = {
-    import org.apache.spark.sql.functions.{col, expr}
+    import org.apache.spark.sql.functions.col
     val root = new Path(table)
     val fs = fsOf(spark, table)
     recoverLatest(fs, table) match {
       case None =>
         commit(spark, table, updates, token); 0L
       case Some((v, content)) =>
-        val snap = parseSnap(content)
+        val snap = parseSnap(table, v, content)
         val nv = v + 1
         val dataName = s"data-v$nv-$token"
         val dvName = s"dv-v$nv-$token"
-        val keyed = spark.read.option("mergeSchema", "true")
-          .parquet(snap.dataNames.map(n => new Path(root, n).toString): _*)
-          .select(col(keyCol),
-            expr(FileKeyExpr).as("__graft_file"),
-            col("_metadata.row_index").as("__graft_pos"))
-        val hits = keyed
-          .join(updates.select(col(keyCol)).distinct(), Seq(keyCol), "left_semi")
-          .select(col("__graft_file").as("file"), col("__graft_pos").as("pos"))
-        val prior = snap.dvName.map(n =>
-          spark.read.parquet(new Path(root, n).toString))
-        val merged = prior.map(hits.unionByName(_)).getOrElse(hits).distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val newCount = merged.count()
-          // prior DV cardinality from footers, driver-side (no job)
-          val replaced = newCount - snap.dvName.map(n => parquetRowCount(
-            spark.sparkContext.hadoopConfiguration, new Path(root, n)))
-            .getOrElse(0L)
-          updates.write.mode("overwrite").parquet(new Path(root, dataName).toString)
-          writeDirStats(spark, root, dataName)
-          val dirs = snap.dataNames :+ dataName
-          val entry =
-            if (newCount == 0L) dirs.mkString(" ")
-            else {
-              writeDv(merged, new Path(root, dvName))
-              s"${dirs.mkString(" ")}\n$dvName"
-            }
-          val pending = stageBloomAdvance(spark, root, v, nv,
-            snap.dataNames, Seq(dataName))
-          publish(fs, root, nv, entry, token,
-            Seq(new Path(root, dataName), new Path(root, dvName)) ++ pending.map(_._1))
-          commitBloomAdvance(fs, root, pending, nv)
-          replaced
-        } finally { merged.unpersist(); () }
+        // a semi join ignores duplicate update keys — no distinct needed
+        val (replaced, dvKeys) = stageDv(spark, snap, dvName,
+          _.join(updates.select(col(keyCol)), Seq(keyCol), "left_semi"))
+        if (replaced == 0L) fs.delete(new Path(root, dvName), true)
+        updates.write.mode("overwrite").parquet(new Path(root, dataName).toString)
+        val stats = writeDirStats(spark, root, dataName)
+        val next = LakeSnapshot(nv, table, snap.dataDirNames :+ dataName,
+          if (replaced == 0L) snap.dvName else Some(dvName))
+        val pending = stageBloomAdvance(spark, root, v, nv,
+          snap.dataDirNames, Seq(dataName))
+        publish(fs, root, nv, entryOf(next), token,
+          Seq(new Path(root, dataName), new Path(root, dvName)) ++ pending.map(_._1))
+        commitBloomAdvance(fs, root, pending, nv)
+        seedMeta(spark, Some(snap), next, stats, if (replaced == 0L) None else dvKeys)
+        replaced
     }
   }
 
@@ -1340,8 +1391,9 @@ object CommitLogTableFormat extends TableFormat {
       fs.delete(staged, true)
       throw new ConstraintViolationException(bad)
     }
-    writeDirStats(spark, root, dataName) // only validated data earns stats
+    val stats = writeDirStats(spark, root, dataName) // only validated data earns stats
     publish(fs, root, v, dataName, token, Seq(staged))
+    seedMeta(spark, None, LakeSnapshot(v, table, Seq(dataName), None), stats, None)
   }
 
   /** [[append]] gated by CHECK constraints — same stage→validate→
@@ -1352,9 +1404,8 @@ object CommitLogTableFormat extends TableFormat {
                     constraints: Seq[(String, org.apache.spark.sql.Column)]): Long = {
     val root = new Path(table)
     val fs = fsOf(spark, table)
-    val prior = recoverLatest(fs, table)
-    val v = prior.map(_._1).getOrElse(0L) + 1L
-    val priorSnap = prior.map(p => parseSnap(p._2))
+    val prior = recoverLatest(fs, table).map { case (pv, c) => parseSnap(table, pv, c) }
+    val v = prior.map(_.version).getOrElse(0L) + 1L
     val dataName = s"data-v$v-$token"
     val staged = new Path(root, dataName)
     df.write.mode("overwrite").parquet(staged.toString)
@@ -1363,14 +1414,8 @@ object CommitLogTableFormat extends TableFormat {
       fs.delete(staged, true)
       throw new ConstraintViolationException(bad)
     }
-    writeDirStats(spark, root, dataName) // only validated data earns stats
-    val dirs = priorSnap.map(_.dataNames).getOrElse(Seq.empty) :+ dataName
-    val content = dirs.mkString(" ") +
-      priorSnap.flatMap(_.dvName).map(dv => s"\n$dv").getOrElse("")
-    val pending = prior.map(p => stageBloomAdvance(spark, root, p._1, v,
-      parseSnap(p._2).dataNames, Seq(dataName))).getOrElse(Seq.empty)
-    publish(fs, root, v, content, token, staged +: pending.map(_._1))
-    commitBloomAdvance(fs, root, pending, v)
+    // only validated data earns stats
+    publishAppend(spark, table, prior, v, dataName, token, writeDirStats(spark, root, dataName))
     v
   }
 
@@ -1419,8 +1464,8 @@ object CommitLogTableFormat extends TableFormat {
   def upsertIdempotent(spark: SparkSession, table: String, updates: DataFrame,
                        keyCol: String, token: String): Option[Long] = {
     val fs = fsOf(spark, table)
-    val applied = recoverLatest(fs, table).exists { case (_, content) =>
-      parseSnap(content).dataNames.lastOption
+    val applied = recoverLatest(fs, table).exists { case (v, content) =>
+      parseSnap(table, v, content).dataDirNames.lastOption
         .exists(_.replaceFirst("^data-v\\d+-", "") == token)
     }
     if (applied) None
@@ -1443,8 +1488,8 @@ object CommitLogTableFormat extends TableFormat {
   def fileStats(spark: SparkSession, table: String): Option[DataFrame] = {
     import spark.implicits._
     val fs = fsOf(spark, table)
-    latest(fs, table).map { case (_, content) =>
-      val files = snapFiles(fs, table, parseSnap(content))
+    currentSnapshot(spark, table).map { snap =>
+      val files = snapFiles(fs, snap)
       val bconf = spark.sparkContext.broadcast(
         new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
       val slices = math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
@@ -1505,12 +1550,14 @@ object CommitLogTableFormat extends TableFormat {
     * missing sidecar can never lose rows, only speed. Schema is the
     * [[ParquetFooters.FileColStats]] row form, both kinds in one
     * frame (`kind` = long | string; the unused side NULL). */
-  private def writeDirStats(spark: SparkSession, root: Path, dataName: String): Unit = {
+  private def writeDirStats(spark: SparkSession, root: Path,
+                            dataName: String): Option[Map[String, ParquetFooters.FileColStats]] = {
     import spark.implicits._
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dir = new Path(root, dataName)
     val files = ParquetFooters.dataFiles(fs, dir)
-    if (files.nonEmpty) {
+    if (files.isEmpty) Some(Map.empty)
+    else {
       def rowsOf(p: String, conf: Configuration) = {
         val path = new Path(p); val name = path.getName
         ParquetFooters.footerStats(path, conf).map { case (c, mn, mx, nulls, n) =>
@@ -1528,11 +1575,20 @@ object CommitLogTableFormat extends TableFormat {
       // job + commit-protocol round trip (~150 ms, r16 measured) to
       // store a handful of rows. Metadata writes never spin up the
       // cluster — the Delta/Iceberg commit discipline. Big dirs fan
-      // out like fileStats and keep the distributed write.
-      if (files.size <= 8)
-        writeSidecarLocal(spark.sparkContext.hadoopConfiguration, dir,
-          files.flatMap(p => rowsOf(p, spark.sparkContext.hadoopConfiguration)))
-      else {
+      // out like fileStats and keep the distributed write. Only the
+      // driver-side path returns the stats (keyed `<dir>/<file>`, as
+      // [[snapshotFileStats]] reads them back) for [[seedMeta]].
+      if (files.size <= 8) {
+        val rows = files.flatMap(p => rowsOf(p, spark.sparkContext.hadoopConfiguration))
+        writeSidecarLocal(spark.sparkContext.hadoopConfiguration, dir, rows)
+        Some(rows.groupBy(_._1).map { case (file, rs) =>
+          s"$dataName/$file" -> ParquetFooters.FileColStats(
+            rs.collect { case (_, c, "long", Some(mn), Some(mx), _, _, nulls, n) =>
+              c -> ((mn, mx, nulls, n)) }.toMap,
+            rs.collect { case (_, c, "string", _, _, Some(lo), Some(hi), nulls, n) =>
+              c -> ((lo, hi, nulls, n)) }.toMap)
+        })
+      } else {
         val bconf = spark.sparkContext.broadcast(
           new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
         val slices = math.max(1,
@@ -1543,6 +1599,7 @@ object CommitLogTableFormat extends TableFormat {
             "lower", "upper", "null_count", "n_rows")
           .coalesce(1).write.mode("overwrite")
           .parquet(new Path(dir, StatsSidecarName).toString)
+        None
       }
     }
   }
@@ -1640,6 +1697,13 @@ object CommitLogTableFormat extends TableFormat {
     }
   }
 
+  /** (path, bytes) of a dir's data files: the [[ParquetFooters.dataFiles]]
+    * listing with its sizes. */
+  private def dirSizes(fs: FileSystem, root: String, dir: String): Seq[(String, Long)] = {
+    val listed = fs.globStatus(new Path(new Path(new Path(root), dir), "*.parquet"))
+    if (listed == null) Seq.empty else listed.toSeq.map(st => st.getPath.toString -> st.getLen)
+  }
+
   private val sizesCache =
     new java.util.concurrent.ConcurrentHashMap[SnapCacheKey, Map[String, Long]]
 
@@ -1653,12 +1717,7 @@ object CommitLogTableFormat extends TableFormat {
                                          snapshot: LakeSnapshot): Map[String, Long] = {
     val fs = fsOf(spark, snapshot.root)
     cachedBy(sizesCache, snapCacheKey(fs, snapshot), 256) {
-      val root = new Path(snapshot.root)
-      snapshot.dataDirNames.flatMap { n =>
-        val listed = fs.globStatus(new Path(new Path(root, n), "*.parquet"))
-        if (listed == null) Seq.empty[(String, Long)]
-        else listed.toSeq.map(st => st.getPath.toString -> st.getLen)
-      }.toMap
+      snapshot.dataDirNames.flatMap(dirSizes(fs, snapshot.root, _)).toMap
     }
   }
 
@@ -1666,12 +1725,18 @@ object CommitLogTableFormat extends TableFormat {
     new java.util.concurrent.ConcurrentHashMap[SnapCacheKey, Set[String]]
 
   /** The file keys (`<dir>/<file>`) with at least one deletion-vector
-    * hit in this snapshot — bounded by the FILE count (one distinct
-    * over the DV sidecar, cached per version), never the deleted-row
-    * count. Lets the scanner hand DV-free files a clean partition: a
-    * task whose file has no hits skips the per-task DV sidecar read
-    * entirely, and a scan whose kept files are ALL clean stays on the
-    * columnar path even though the snapshot carries a DV. */
+    * hit in this snapshot — bounded by the FILE count, never the
+    * deleted-row count. A version this JVM committed has it seeded by
+    * the commit ([[seedMeta]]: carried over from the prior version
+    * when the DV is unchanged, or read from the written sidecar's
+    * dictionary pages); any other version pays one distinct over the
+    * DV sidecar, cached per version. Exactness matters both ways: a
+    * missing file would surface deleted rows, and a SUPERSET would
+    * push clean scans onto the row path. Lets the scanner hand DV-free
+    * files a clean partition: a task whose file has no hits skips the
+    * per-task DV sidecar read entirely, and a scan whose kept files
+    * are ALL clean stays on the columnar path even though the snapshot
+    * carries a DV. */
   private[sources] def dvHitFiles(spark: SparkSession,
                                   snapshot: LakeSnapshot): Set[String] =
     snapshot.dvName match {
@@ -1680,7 +1745,7 @@ object CommitLogTableFormat extends TableFormat {
         val fs = fsOf(spark, snapshot.root)
         cachedBy(dvFilesCache, snapCacheKey(fs, snapshot), 256) {
           import spark.implicits._
-          spark.read.parquet(snapshot.dvPath.get)
+          readDv(spark, snapshot.dvPath.get)
             .select("file").distinct().as[String].collect().toSet
         }
     }
@@ -1743,6 +1808,115 @@ object CommitLogTableFormat extends TableFormat {
     }
   }
 
+  /** The Spark schema a dir's first footer records (the row-metadata
+    * key Spark's parquet writer stores and schema inference prefers),
+    * nullable as a file-source read reports it: `dir`'s inferred schema,
+    * since one Spark write gives every file of a dir the same footer
+    * schema. None when the dir holds no data file or the footer no
+    * Spark schema. */
+  private def dirSchema(spark: SparkSession, root: Path,
+                        dir: String): Option[org.apache.spark.sql.types.StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    ParquetFooters.dataFiles(root.getFileSystem(conf), new Path(root, dir)).headOption
+      .flatMap { p =>
+        // the row-group metadata is most of a footer, and not needed here
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(p), conf),
+          org.apache.parquet.HadoopReadOptions.builder(conf)
+            .withMetadataFilter(
+              org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+            .build())
+        try Option(r.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        finally r.close()
+      }
+      .map(json => nullable(org.apache.spark.sql.types.DataType.fromJson(json))
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+  }
+
+  private def nullable(dt: org.apache.spark.sql.types.DataType): org.apache.spark.sql.types.DataType = {
+    import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
+    dt match {
+      case s: StructType =>
+        StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+      case other => other
+    }
+  }
+
+  /** Seed the metadata caches for `next`, a version this JVM has just
+    * published on top of `prior`, under the key a reader computes (the
+    * entry is stamped by then). Each value is built from the prior
+    * version's cached entry for the dirs both versions share, plus what
+    * the commit wrote: the new dirs' listings, their stats as
+    * [[writeDirStats]] measured them (`newStats`), and the file keys
+    * of a newly written DV sidecar (`newDvKeys`). Only values derived
+    * EXACTLY are seeded; anything else is left for the first read to
+    * compute as before:
+    *  - schema: the prior union when the dirs are unchanged, or when
+    *    every added dir — and, if some prior dirs were dropped, every
+    *    kept one — has exactly that schema in its footer (a full
+    *    rewrite: one schema shared by all of its dirs). A
+    *    schema-evolving commit is not seeded.
+    *  - file list and sizes: the prior's per-dir listings, plus a LIST
+    *    of each dir the prior does not describe.
+    *  - stats: the prior's per-file stats of kept dirs plus `newStats`;
+    *    not seeded when either is unknown.
+    *  - DV-hit files: the prior's set when the DV is carried forward,
+    *    `newDvKeys` when a new DV was written. */
+  private def seedMeta(spark: SparkSession, prior: Option[LakeSnapshot], next: LakeSnapshot,
+                       newStats: Option[Map[String, ParquetFooters.FileColStats]],
+                       newDvKeys: Option[Set[String]]): Unit = {
+    val fs = fsOf(spark, next.root)
+    val root = new Path(next.root)
+    snapCacheKey(fs, next).foreach { key =>
+      val priorKey = prior.flatMap(snapCacheKey(fs, _))
+      def priorOf[V](cache: java.util.concurrent.ConcurrentHashMap[SnapCacheKey, V]): Option[V] =
+        priorKey.flatMap(k => Option(cache.get(k)))
+      val priorDirs = prior.fold(Seq.empty[String])(_.dataDirNames)
+      val kept = next.dataDirNames.filter(priorDirs.contains)
+      val added = next.dataDirNames.filterNot(priorDirs.contains)
+      def dirOf(file: String): String = new Path(file).getParent.getName
+
+      // each dir's (files, sizes): the prior's, or one LIST
+      val priorSizes = priorOf(sizesCache).map(_.toSeq.groupBy(kv => dirOf(kv._1)))
+        .getOrElse(Map.empty)
+      val priorFiles = priorOf(filesCache).map(_.groupBy(dirOf)).getOrElse(Map.empty)
+      val listed = next.dataDirNames.map(d => priorFiles.get(d).zip(priorSizes.get(d))
+        .getOrElse { val l = dirSizes(fs, next.root, d); (l.map(_._1), l) })
+      put(filesCache, key, listed.flatMap(_._1), 256)
+      put(sizesCache, key, listed.flatMap(_._2).toMap, 256)
+
+      // the dirs whose footer schema must equal the union for it to hold
+      lazy val schemas = (added ++ (if (kept == priorDirs) Nil else kept))
+        .map(dirSchema(spark, root, _))
+      val schema = if (kept.isEmpty) schemas.headOption.flatten else priorOf(schemaCache)
+      schema.filter(s => schemas.forall(_.contains(s))).foreach(put(schemaCache, key, _, 256))
+
+      val keptStats =
+        if (kept.isEmpty) Some(Map.empty[String, ParquetFooters.FileColStats])
+        else priorOf(statsCache).map(_.filter { case (k, _) => kept.contains(k.takeWhile(_ != '/')) })
+      for (ks <- keptStats; ns <- newStats) put(statsCache, key, ks ++ ns, 64)
+
+      val dvKeys =
+        if (next.dvName.isEmpty) None
+        else if (next.dvName == prior.flatMap(_.dvName)) priorOf(dvFilesCache)
+        else newDvKeys
+      dvKeys.foreach(put(dvFilesCache, key, _, 256))
+    }
+  }
+
+  /** Which metadata caches hold an entry for `snapshot` (`schema`,
+    * `files`, `sizes`, `stats`, `dvFiles`) — a probe for specs that
+    * check what a commit seeded. */
+  private[sources] def cachedMeta(spark: SparkSession, snapshot: LakeSnapshot): Set[String] =
+    snapCacheKey(fsOf(spark, snapshot.root), snapshot).toSeq.flatMap { k =>
+      Seq("schema" -> schemaCache.containsKey(k), "files" -> filesCache.containsKey(k),
+        "sizes" -> sizesCache.containsKey(k), "stats" -> statsCache.containsKey(k),
+        "dvFiles" -> dvFilesCache.containsKey(k)).collect { case (n, true) => n }
+    }.toSet
+
   /** Stats-driven prune over a resolved snapshot: evaluate `keep`
     * driver-side against [[snapshotFileStats]] (a cached metadata map —
     * zero jobs, zero footer opens after the version's first query).
@@ -1766,10 +1940,9 @@ object CommitLogTableFormat extends TableFormat {
     * two versions' files/DV, breaking the isolation the format
     * guarantees everywhere else. Files without a usable bound for the
     * column are KEPT — pruning must never lose rows. */
-  private def pruneSnap(spark: SparkSession, table: String, version: Long,
-                        snap: Snap, column: String, lo: Long,
-                        hi: Long): (Seq[String], Int) =
-    keptFilesStats(spark, LakeSnapshot(version, table, snap.dataNames, snap.dvName),
+  private def pruneSnap(spark: SparkSession, snap: LakeSnapshot, column: String,
+                        lo: Long, hi: Long): (Seq[String], Int) =
+    keptFilesStats(spark, snap,
       st => st.longs.get(column).forall { case (mn, mx, _, _) => !(mx < lo || mn > hi) })
 
   /** String-key variant of [[pruneSnap]]: bounds come from the
@@ -1778,31 +1951,22 @@ object CommitLogTableFormat extends TableFormat {
     * a city-data pipeline actually filters by prune too, not just
     * integer ids. Truncated bounds are conservative by construction;
     * non-ASCII or missing bounds keep the file. */
-  private def pruneSnapString(spark: SparkSession, table: String, version: Long,
-                              snap: Snap, column: String, lo: String,
-                              hi: String): (Seq[String], Int) =
-    keptFilesStats(spark, LakeSnapshot(version, table, snap.dataNames, snap.dvName),
+  private def pruneSnapString(spark: SparkSession, snap: LakeSnapshot, column: String,
+                              lo: String, hi: String): (Seq[String], Int) =
+    keptFilesStats(spark, snap,
       st => st.strs.get(column).forall { case (lower, upper, _, _) =>
         !(upper < lo || lower > hi) })
 
   /** The current snapshot's data files that can contain a row with
     * `column` ∈ [lo, hi], per the footer zone map: (kept, total). */
   def prunedFiles(spark: SparkSession, table: String, column: String,
-                  lo: Long, hi: Long): Option[(Seq[String], Int)] = {
-    val fs = fsOf(spark, table)
-    latest(fs, table).map { case (v, content) =>
-      pruneSnap(spark, table, v, parseSnap(content), column, lo, hi)
-    }
-  }
+                  lo: Long, hi: Long): Option[(Seq[String], Int)] =
+    currentSnapshot(spark, table).map(pruneSnap(spark, _, column, lo, hi))
 
   /** [[prunedFiles]] on a STRING key via the truncated string bounds. */
   def prunedFilesString(spark: SparkSession, table: String, column: String,
-                        lo: String, hi: String): Option[(Seq[String], Int)] = {
-    val fs = fsOf(spark, table)
-    latest(fs, table).map { case (v, content) =>
-      pruneSnapString(spark, table, v, parseSnap(content), column, lo, hi)
-    }
-  }
+                        lo: String, hi: String): Option[(Seq[String], Int)] =
+    currentSnapshot(spark, table).map(pruneSnapString(spark, _, column, lo, hi))
 
   /** MEASURED truncated-string zone map of the current snapshot — the
     * string twin of [[fileStats]]: one row per (data file, string leaf
@@ -1811,8 +1975,8 @@ object CommitLogTableFormat extends TableFormat {
   def fileStatsStrings(spark: SparkSession, table: String): Option[DataFrame] = {
     import spark.implicits._
     val fs = fsOf(spark, table)
-    latest(fs, table).map { case (_, content) =>
-      val files = snapFiles(fs, table, parseSnap(content))
+    currentSnapshot(spark, table).map { snap =>
+      val files = snapFiles(fs, snap)
       val bconf = spark.sparkContext.broadcast(
         new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
       val slices = math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
@@ -1834,7 +1998,7 @@ object CommitLogTableFormat extends TableFormat {
     * requested key instead of an AnalysisException; when only the
     * PRUNE emptied the list, the schema comes from one known data
     * file — never from the directory read that throws on empty dirs. */
-  private def resolveKept(spark: SparkSession, table: String, snap: Snap,
+  private def resolveKept(spark: SparkSession, snap: LakeSnapshot,
                           kept: Seq[String], all: Seq[String],
                           column: String,
                           keyType: org.apache.spark.sql.types.DataType): DataFrame = {
@@ -1846,19 +2010,10 @@ object CommitLogTableFormat extends TableFormat {
       spark.read.parquet(all.head).limit(0)
     else {
       val data = spark.read.option("mergeSchema", "true").parquet(kept: _*)
-      snap.dvName match {
+      snap.dvPath match {
         case None => data
-        case Some(dvName) =>
-          val dv = spark.read.parquet(new Path(new Path(table), dvName).toString)
-          val keyed = data
-            .withColumn("__graft_file",
-              org.apache.spark.sql.functions.expr(FileKeyExpr))
-            .withColumn("__graft_pos",
-              org.apache.spark.sql.functions.col("_metadata.row_index"))
-          keyed.join(dv,
-              keyed("__graft_file") === dv("file") && keyed("__graft_pos") === dv("pos"),
-              "left_anti")
-            .drop("__graft_file", "__graft_pos")
+        case Some(dv) =>
+          minusDv(withRowKey(data), readDv(spark, dv)).drop("__graft_file", "__graft_pos")
       }
     }
   }
@@ -1879,13 +2034,12 @@ object CommitLogTableFormat extends TableFormat {
                  lo: Long, hi: Long): Option[DataFrame] = {
     import org.apache.spark.sql.functions.col
     val fs = fsOf(spark, table)
-    latest(fs, table).map { case (v, content) =>
-      val snap = parseSnap(content)
-      val (kept, total) = pruneSnap(spark, table, v, snap, column, lo, hi)
+    currentSnapshot(spark, table).map { snap =>
+      val (kept, total) = pruneSnap(spark, snap, column, lo, hi)
       val all =
         if (kept.size == total) kept
-        else snapFiles(fs, table, snap)
-      resolveKept(spark, table, snap, kept, all, column,
+        else snapFiles(fs, snap)
+      resolveKept(spark, snap, kept, all, column,
         org.apache.spark.sql.types.LongType)
         .filter(col(column).between(lo, hi))
     }
@@ -1898,13 +2052,12 @@ object CommitLogTableFormat extends TableFormat {
                        lo: String, hi: String): Option[DataFrame] = {
     import org.apache.spark.sql.functions.col
     val fs = fsOf(spark, table)
-    latest(fs, table).map { case (v, content) =>
-      val snap = parseSnap(content)
-      val (kept, total) = pruneSnapString(spark, table, v, snap, column, lo, hi)
+    currentSnapshot(spark, table).map { snap =>
+      val (kept, total) = pruneSnapString(spark, snap, column, lo, hi)
       val all =
         if (kept.size == total) kept
-        else snapFiles(fs, table, snap)
-      resolveKept(spark, table, snap, kept, all, column,
+        else snapFiles(fs, snap)
+      resolveKept(spark, snap, kept, all, column,
         org.apache.spark.sql.types.StringType)
         .filter(col(column).between(lo, hi))
     }
@@ -1932,14 +2085,14 @@ object CommitLogTableFormat extends TableFormat {
     import org.apache.spark.sql.functions.{col, expr, lit, xxhash64, call_function}
     val root = new Path(table)
     val fs = fsOf(spark, table)
-    latest(fs, table).map { case (v, content) =>
-      val snap = parseSnap(content)
+    currentSnapshot(spark, table).map { snap =>
+      val v = snap.version
       val idxDir = new Path(root, "_index")
       fs.mkdirs(idxDir)
       val target = new Path(idxDir, s"bloom-v$v-$column")
       val tmp = new Path(idxDir, s".tmp-bloom-v$v-$column")
       val blooms = spark.read.option("mergeSchema", "true")
-        .parquet(snap.dataNames.map(n => new Path(root, n).toString): _*)
+        .parquet(snap.dataDirPaths: _*)
         .select(col(column), expr(FileKeyExpr).as("file"))
         .groupBy(col("file"))
         .agg(call_function("bloom_agg", xxhash64(col(column)),
@@ -1977,14 +2130,13 @@ object CommitLogTableFormat extends TableFormat {
     import org.apache.spark.sql.functions.{col, lit, xxhash64}
     val root = new Path(table)
     val fs = fsOf(spark, table)
-    latest(fs, table).map { case (v, content) =>
-      val snap = parseSnap(content)
-      val idx = new Path(new Path(root, "_index"), s"bloom-v$v-$column")
+    currentSnapshot(spark, table).map { snap =>
+      val idx = new Path(new Path(root, "_index"), s"bloom-v${snap.version}-$column")
       if (!fs.exists(idx)) {
-        val data = resolve(spark, table, snap)
+        val data = resolve(spark, snap)
         data.filter(col(column) === lit(value))
       } else {
-        val all = snapFiles(fs, table, snap)
+        val all = snapFiles(fs, snap)
         // Type the probe from the TABLE schema, not the probe value's
         // Scala runtime class: XxHash64 hashes IntegerType (4 bytes)
         // and LongType (8 bytes) DIFFERENTLY, so probing an int column
@@ -2005,9 +2157,7 @@ object CommitLogTableFormat extends TableFormat {
             case _ => org.apache.spark.sql.types.LongType
           }
           else {
-            val schema = spark.read.option("mergeSchema", "true")
-              .parquet(snap.dataNames.map(n => new Path(root, n).toString): _*)
-              .schema
+            val schema = snapshotSchema(spark, snap)
             schema.find(_.name == column).map(_.dataType).getOrElse(
               throw new IllegalArgumentException(
                 s"readBloomPoint: column $column not in $root's schema"))
@@ -2034,7 +2184,7 @@ object CommitLogTableFormat extends TableFormat {
           val parts = p.split('/')
           keptKeys.contains(parts.takeRight(2).mkString("/"))
         }
-        residual(resolveKept(spark, table, snap, kept, all, column, keyType))
+        residual(resolveKept(spark, snap, kept, all, column, keyType))
       }
     }
   }

@@ -2858,6 +2858,29 @@ class SourcesStreamingSpec extends GraftSpec {
     assert(ex.attempts == 2)
   }
 
+  test("Jobs.runWithRetry: fatal errors propagate unwrapped from the first attempt") {
+    def fatal(err: Throwable): (Throwable, Int, Int) = {
+      var calls = 0
+      var sleeps = 0
+      val thrown = intercept[Throwable] {
+        graft.jobs.Jobs.runWithRetry(graft.jobs.Jobs.RetryPolicy(maxAttempts = 5, intervalMs = 1),
+          sleep = _ => sleeps += 1) { calls += 1; throw err }
+      }
+      (thrown, calls, sleeps)
+    }
+    val oom = new OutOfMemoryError("heap")
+    assert(fatal(oom) == ((oom, 1, 0)))
+    val interrupt = new InterruptedException("cancelled")
+    assert(fatal(interrupt) == ((interrupt, 1, 0)))
+    // a non-fatal error the policy refuses is still wrapped, not retried
+    val refused = intercept[graft.jobs.Jobs.RetriesExhausted] {
+      graft.jobs.Jobs.runWithRetry(
+        graft.jobs.Jobs.RetryPolicy(intervalMs = 1, retryOn = _ => false),
+        sleep = _ => ()) { throw new IllegalStateException("bad input") }
+    }
+    assert(refused.attempts == 1 && refused.getCause.isInstanceOf[IllegalStateException])
+  }
+
   test("Jobs.runPipeline: crash-resume skips the completed prefix; success clears the ledger") {
     import org.apache.hadoop.fs.Path
     val dir = Files.createTempDirectory("graft_pipeline").toString

@@ -31,7 +31,10 @@ TABLES = ("region nation customer supplier part orders lineitem "
 
 # Types that DuckDB can emit but the driver's pandas/hash pipeline (and
 # Spark's type system) cannot represent as the matching Spark type.
-BANNED = {"HUGEINT", "UHUGEINT", "UTINYINT", "USMALLINT", "UINTEGER", "UBIGINT"}
+# DECIMAL(p,s) (matched by its prefix) hashes as a different Python type
+# on each side; oracled results are DOUBLE by the suite's rule.
+BANNED = {"HUGEINT", "UHUGEINT", "UTINYINT", "USMALLINT", "UINTEGER", "UBIGINT",
+          "DECIMAL"}
 
 
 def main():
