@@ -23,16 +23,8 @@ object Tables {
   def customer(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "customer")
   def supplier(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "supplier")
   def part(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "part")
-  // graft.spreadAll: measurement-only knob (A/B the spread loader
-  // across the whole suite); query code opts in explicitly instead.
-  private def spreadAll = sys.props.get("graft.spreadAll").contains("1") ||
-    sys.env.get("GRAFT_SPREAD_ALL").contains("1")
-  def orders(spark: SparkSession, dir: String): DataFrame =
-    if (spreadAll) spread(spark, dir, "orders", "o_orderkey")
-    else apply(spark, dir, "orders")
-  def lineitem(spark: SparkSession, dir: String): DataFrame =
-    if (spreadAll) spread(spark, dir, "lineitem", "l_orderkey")
-    else apply(spark, dir, "lineitem")
+  def orders(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "orders")
+  def lineitem(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "lineitem")
   /** events.ts has shipped as TIMESTAMP(NANOS) (arrives as a long under
     * spark.sql.legacy.parquet.nanosAsLong=true — truncate to micros, the
     * same truncation DuckDB applies casting TIMESTAMP_NS → TIMESTAMP)

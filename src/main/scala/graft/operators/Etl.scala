@@ -956,10 +956,7 @@ object Etl {
         max(when(cond, col(c))).as(s"${c}_max_$name"))
       side("a", loadA) ++ side("b", !loadA)
     }
-    // spread for the same reason as a20: 8 HLL partials in one scan
-    // task otherwise serialize the sketch updates (guide §2.5)
-    val wide = Tables.spread(spark, dir, "orders", "o_orderkey")
-      .agg(aggs.head, aggs.tail: _*)
+    val wide = Tables.orders(spark, dir).agg(aggs.head, aggs.tail: _*)
     val stacked = DriftCols.map { c =>
       struct(
         lit(c).as("column_name"),

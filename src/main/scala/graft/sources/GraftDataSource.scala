@@ -6,27 +6,21 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.MessageType
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** The SQL / DataSource V2 surface of [[CommitLogTableFormat]] —
   * `spark.read.format("graft").load(tableRoot)` (and any temp view
@@ -55,8 +49,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    optimization, never a correctness dependency;
   *  - column pruning through `SupportsPushDownRequiredColumns`: the
   *    per-file parquet projection reads only the requested column
-  *    chunks; an empty/disjoint projection degrades to footer
-  *    row-count replay (COUNT(*) never touches a data page).
+  *    chunks (a column the file predates null-fills in the decoder);
+  *    an empty projection degrades to footer row-count replay
+  *    (COUNT(*) never touches a data page).
   *
   * WRITES go THROUGH the format's commit protocol, never around it:
   * `INSERT INTO` / `df.write.format("graft")` stage a new data dir and
@@ -69,9 +64,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * maps to the full-replacement commit. Change-feed relations and
   * time-traveled snapshots stay read-only.
   *
-  * Scale: planning is one footer-walk job over file NAMES (the
-  * keptFiles shape) plus an optional bloom probe; each task reads one
-  * data file with a projected parquet reader and filters the (small)
+  * Scale: planning evaluates the version's cached per-file stats map
+  * driver-side ([[CommitLogTableFormat.keptFilesStats]]) plus an
+  * optional bloom probe; each task reads one data file through Spark's
+  * vectorized parquet reader and filters the (small)
   * DV sidecar to its own file key with a parquet record filter whose
   * row-group stats skip unrelated DV blocks.
   *
@@ -915,7 +911,7 @@ class GraftScan(path: String, tableSchema: StructType,
       case None => stat(OptionalLong.of(0L), OptionalLong.of(0L))
       case Some(snap) =>
         val all = CommitLogTableFormat.snapshotDataFiles(spark, snap)
-        val kept = pruneFiles(snap, all)
+        val kept = zoneMapPrune(snap, all)
         val sizes = CommitLogTableFormat.snapshotFileSizes(spark, snap)
         val factor = spark.sessionState.conf.fileCompressionFactor
         val bytes = kept.iterator.map(f => sizes.getOrElse(f, 0L)).sum
@@ -961,9 +957,10 @@ class GraftScan(path: String, tableSchema: StructType,
   private def saturatingInc(v: Long): Long = if (v == Long.MaxValue) v else v + 1L
   private def saturatingDec(v: Long): Long = if (v == Long.MinValue) v else v - 1L
 
-  /** One distributed footer pass evaluating EVERY accepted zone-map
-    * constraint, then the optional bloom intersections. */
-  private def pruneFiles(snap: LakeSnapshot, all: Seq[String]): Seq[String] = {
+  /** One pass over the version's cached per-file stats evaluating
+    * EVERY accepted zone-map constraint, then the optional bloom
+    * intersections. */
+  private def zoneMapPrune(snap: LakeSnapshot, all: Seq[String]): Seq[String] = {
     import GraftScan.longValue
     def dtOf(c: String): Option[DataType] =
       tableSchema.fields.find(_.name == c).map(_.dataType)
@@ -1145,7 +1142,7 @@ class GraftScan(path: String, tableSchema: StructType,
 
   private def planSnapshot(snap: LakeSnapshot): Array[InputPartition] = {
     val all = CommitLogTableFormat.snapshotDataFiles(spark, snap)
-    val pruned = pruneFiles(snap, all)
+    val pruned = zoneMapPrune(snap, all)
     val kept = limitTruncated(snap, pruned)
     plannedFiles = Some((kept.size, all.size))
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1194,16 +1191,15 @@ private[sources] class GraftReaderFactory(required: StructType,
                                           conf: org.apache.spark.broadcast.Broadcast[SerializableHadoopConf])
     extends PartitionReaderFactory {
 
-  /** COLUMNAR scan (the r13 verdict's missing #1 — the row-by-row
-    * parquet-example Group loop was the SQL surface's CPU ceiling at
-    * scan volume): DV-free snapshots read through Spark's OWN
+  /** COLUMNAR scan: DV-free snapshots read through Spark's OWN
     * vectorized parquet reader and hand ColumnarBatch straight to the
     * exec (whole-stage codegen consumes the vectors; one
     * ColumnarToRow at the boundary). Snapshots WITH a deletion-vector
     * sidecar stay on the row path, where positions are counted and
-    * deleted rows skipped mid-stream — but the decode underneath is
-    * STILL the vectorized reader (batch-decode, row handoff), so the
-    * Group loop survives only as the init-failure fallback. */
+    * deleted rows skipped mid-stream — the decode underneath is the
+    * SAME vectorized reader (batch-decode, row handoff): the lake has
+    * one data decoder, and a reader that fails to initialize fails
+    * the task. */
   override def supportColumnarReads(partition: InputPartition): Boolean = {
     val p = partition.asInstanceOf[GraftInputPartition]
     p.columnarOk && required.nonEmpty && columnarSchemaOk
@@ -1219,11 +1215,7 @@ private[sources] class GraftReaderFactory(required: StructType,
     val p = partition.asInstanceOf[GraftInputPartition]
     val c = conf.value.value
     if (required.isEmpty) new GraftCountReplayReader(p, required, c)
-    else
-      try new GraftVectorizedRowReader(p, required, c)
-      catch { case scala.util.control.NonFatal(_) =>
-        new GraftPartitionReader(p, required, c)
-      }
+    else new GraftVectorizedRowReader(p, required, c)
   }
 }
 
@@ -1286,8 +1278,7 @@ private[sources] class GraftColumnarReader(filePath: String, required: StructTyp
 
 /** Row task reader over the vectorized decoder: batch-decode, row
   * handoff, with this file's deleted positions skipped mid-stream
-  * (sequential row order == `_metadata.row_index`, the DV identity —
-  * exactly the Group path's contract at a fraction of its CPU). */
+  * (sequential row order == `_metadata.row_index`, the DV identity). */
 private[sources] class GraftVectorizedRowReader(part: GraftInputPartition,
                                                 required: StructType,
                                                 conf: Configuration)
@@ -1377,196 +1368,5 @@ private[sources] object GraftReaders {
     val arr = buf.toArray
     java.util.Arrays.sort(arr)
     arr
-  }
-}
-
-/** One task = one data file: a projected parquet Group reader
-  * streaming rows in file order (sequential position ==
-  * `_metadata.row_index`, the DV identity), skipping this file's
-  * deleted positions, converting to InternalRow against the REQUIRED
-  * schema with null backfill for columns this file predates. When the
-  * projection is empty or fully absent (COUNT(*) / pure-evolution
-  * selects), no data page is read at all — the footer's row count
-  * replays positions against the DV. */
-private[sources] class GraftPartitionReader(part: GraftInputPartition,
-                                            required: StructType,
-                                            conf: Configuration)
-    extends PartitionReader[InternalRow] {
-
-  private val deleted: Array[Long] =
-    GraftReaders.deletedPositions(part.dvParts, part.fileKey, conf)
-  private def isDeleted(pos: Long): Boolean =
-    deleted.length > 0 && java.util.Arrays.binarySearch(deleted, pos) >= 0
-
-  private val fileSchema: MessageType = {
-    ParquetFooters.opens.incrementAndGet()
-    val r = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(part.filePath), conf))
-    try r.getFooter.getFileMetaData.getSchema finally r.close()
-  }
-  private val fileRowCount: Long = {
-    ParquetFooters.opens.incrementAndGet()
-    val r = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(part.filePath), conf))
-    try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum finally r.close()
-  }
-
-  private val wanted = required.fields.map(_.name)
-  private val presentFields =
-    fileSchema.getFields.asScala.filter(f => wanted.contains(f.getName)).toSeq
-  private val projection: Option[MessageType] =
-    if (presentFields.isEmpty) None
-    else Some(new MessageType(fileSchema.getName, presentFields.asJava))
-
-  // required field index -> projection field index (-1 = null backfill)
-  private val fieldIdx: Array[Int] = projection match {
-    case None => Array.fill(required.length)(-1)
-    case Some(proj) => required.fields.map(f =>
-      if (proj.containsField(f.name)) proj.getFieldIndex(f.name) else -1)
-  }
-
-  private val reader: ParquetReader[Group] = projection match {
-    case None => null // footer row-count replay; no data pages
-    case Some(proj) =>
-      val c = new Configuration(conf)
-      c.set(ReadSupport.PARQUET_READ_SCHEMA, proj.toString)
-      ParquetReader.builder(new GroupReadSupport(), new Path(part.filePath))
-        .withConf(c).build()
-  }
-
-  private var pos: Long = -1L
-  private var current: Group = _
-  private val nullRow: InternalRow =
-    new GenericInternalRow(Array.fill[Any](required.length)(null))
-
-  override def next(): Boolean = {
-    if (reader == null) {
-      pos += 1
-      while (pos < fileRowCount && isDeleted(pos)) pos += 1
-      pos < fileRowCount
-    } else {
-      var g = reader.read()
-      pos += 1
-      while (g != null && isDeleted(pos)) { g = reader.read(); pos += 1 }
-      current = g
-      g != null
-    }
-  }
-
-  override def get(): InternalRow = {
-    if (reader == null) nullRow
-    else {
-      val values = new Array[Any](required.length)
-      var i = 0
-      while (i < required.length) {
-        val idx = fieldIdx(i)
-        values(i) =
-          if (idx < 0 || current.getFieldRepetitionCount(idx) == 0) null
-          else GraftPartitionReader.convert(current, idx,
-            required.fields(i).dataType,
-            projection.get.getType(idx))
-        i += 1
-      }
-      new GenericInternalRow(values)
-    }
-  }
-
-  override def close(): Unit = if (reader != null) reader.close()
-}
-
-private[sources] object GraftPartitionReader {
-
-  private val JulianEpochDay = 2440588L
-
-  /** One present, non-null field of a Group → Catalyst value, driven
-    * by the REQUIRED Spark type with the file's physical type deciding
-    * the getter (Spark-written parquet: decimals land as
-    * INT32/INT64/FLBA by precision; timestamps as INT64 micros or
-    * legacy INT96). */
-  def convert(g: Group, idx: Int, dt: DataType,
-              fieldType: org.apache.parquet.schema.Type): Any = dt match {
-    case LongType => g.getLong(idx, 0)
-    case IntegerType => g.getInteger(idx, 0)
-    case ShortType => g.getInteger(idx, 0).toShort
-    case ByteType => g.getInteger(idx, 0).toByte
-    case DoubleType => g.getDouble(idx, 0)
-    case FloatType => g.getFloat(idx, 0)
-    case BooleanType => g.getBoolean(idx, 0)
-    case StringType => UTF8String.fromBytes(g.getBinary(idx, 0).getBytes)
-    case BinaryType => g.getBinary(idx, 0).getBytes
-    case DateType => g.getInteger(idx, 0)
-    case TimestampType | TimestampNTZType =>
-      fieldType.asPrimitiveType().getPrimitiveTypeName match {
-        case PrimitiveTypeName.INT96 =>
-          val b = g.getInt96(idx, 0).getBytes // little-endian nanos(8) + julian day(4)
-          val bb = java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          val nanos = bb.getLong; val day = bb.getInt
-          (day - JulianEpochDay) * 86400000000L + nanos / 1000L
-        case _ => g.getLong(idx, 0) // INT64 micros (Spark's writer)
-      }
-    case d: DecimalType =>
-      fieldType.asPrimitiveType().getPrimitiveTypeName match {
-        case PrimitiveTypeName.INT32 =>
-          Decimal(g.getInteger(idx, 0).toLong, d.precision, d.scale)
-        case PrimitiveTypeName.INT64 =>
-          Decimal(g.getLong(idx, 0), d.precision, d.scale)
-        case _ =>
-          val unscaled = new java.math.BigInteger(g.getBinary(idx, 0).getBytes)
-          Decimal(BigDecimal(new java.math.BigDecimal(unscaled, d.scale)),
-            d.precision, d.scale)
-      }
-    case ArrayType(elem, _) =>
-      // Spark writes the 3-level LIST form: group (LIST) { repeated
-      // group list { <element> } }
-      val listGroup = g.getGroup(idx, 0)
-      val n = listGroup.getFieldRepetitionCount(0)
-      val elems = new Array[Any](n)
-      var j = 0
-      while (j < n) {
-        val rep = listGroup.getGroup(0, j)
-        elems(j) =
-          if (rep.getFieldRepetitionCount(0) == 0) null
-          else convert(rep, 0, elem,
-            rep.getType.getType(0))
-        j += 1
-      }
-      new GenericArrayData(elems)
-    case st: StructType =>
-      // group { <fields> } — project by NAME against the file's group
-      // type, null-filling fields this file's struct predates (the
-      // same evolution contract as top-level columns)
-      val g2 = g.getGroup(idx, 0)
-      val gt = g2.getType
-      val values = new Array[Any](st.length)
-      var j = 0
-      while (j < st.length) {
-        val f = st.fields(j)
-        val fi = if (gt.containsField(f.name)) gt.getFieldIndex(f.name) else -1
-        values(j) =
-          if (fi < 0 || g2.getFieldRepetitionCount(fi) == 0) null
-          else convert(g2, fi, f.dataType, gt.getType(fi))
-        j += 1
-      }
-      new GenericInternalRow(values)
-    case MapType(kt, vt, _) =>
-      // Spark writes the 3-level MAP form: group (MAP) { repeated
-      // group key_value { key, value } }
-      val mapGroup = g.getGroup(idx, 0)
-      val n = mapGroup.getFieldRepetitionCount(0)
-      val keys = new Array[Any](n)
-      val vals = new Array[Any](n)
-      var j = 0
-      while (j < n) {
-        val kv = mapGroup.getGroup(0, j)
-        keys(j) = convert(kv, 0, kt, kv.getType.getType(0))
-        vals(j) =
-          if (kv.getType.getFieldCount < 2 || kv.getFieldRepetitionCount(1) == 0) null
-          else convert(kv, 1, vt, kv.getType.getType(1))
-        j += 1
-      }
-      org.apache.spark.sql.catalyst.util.ArrayBasedMapData(keys, vals)
-    case other =>
-      throw new UnsupportedOperationException(
-        s"graft DSv2 reader: unsupported type $other (column ${fieldType.getName})")
   }
 }

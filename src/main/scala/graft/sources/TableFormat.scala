@@ -392,42 +392,6 @@ object CommitLogTableFormat extends TableFormat {
         .parquet(snapshot.dataDirPaths: _*).schema
     }
 
-  /** Zone-map prune of an EXPLICIT file list (the DSv2 planning hook):
-    * the files whose integer footer stats admit `column` ∈ [lo, hi].
-    * Files without a usable bound are KEPT — pruning never loses rows.
-    * Distributed footer walk, file names only back to the driver. */
-  def pruneFilesLong(spark: SparkSession, files: Seq[String], column: String,
-                     lo: Long, hi: Long): Seq[String] =
-    keptFiles(spark, files, (p, conf) =>
-      ParquetFooters.footerStats(p, conf).find(_._1 == column) match {
-        case Some((_, mn, mx, _, _)) => !(mx < lo || mn > hi)
-        case None => true
-      })
-
-  /** [[pruneFilesLong]] on a STRING key via the truncated string
-    * bounds (conservative by construction). */
-  def pruneFilesString(spark: SparkSession, files: Seq[String], column: String,
-                       lo: String, hi: String): Seq[String] =
-    keptFiles(spark, files, (p, conf) =>
-      ParquetFooters.footerStringStats(p, conf).find(_._1 == column) match {
-        case Some((_, lower, upper, _, _)) => !(upper < lo || lower > hi)
-        case None => true
-      })
-
-  /** NULL-rejecting prune of an explicit file list: drop files whose
-    * footer proves EVERY row of `column` is NULL (an `IsNotNull`
-    * pushdown can skip them). Missing stats keep the file. */
-  def pruneFilesNotNull(spark: SparkSession, files: Seq[String],
-                        column: String): Seq[String] =
-    keptFiles(spark, files, (p, conf) =>
-      ParquetFooters.footerStats(p, conf).find(_._1 == column)
-        .orElse(ParquetFooters.footerStringStats(p, conf).find(_._1 == column)
-          .map { case (c, _, _, nulls, rows) => (c, 0L, 0L, nulls, rows) })
-        match {
-          case Some((_, _, _, nulls, rows)) => nulls < rows
-          case None => true
-        })
-
   /** Bloom-admitted FILE KEYS (`dir/name`, the DV identity) for an
     * equality probe against `column`, or None when no index is pinned
     * to `snapshot`'s version (stale/absent index ⇒ the caller must not
@@ -1475,63 +1439,6 @@ object CommitLogTableFormat extends TableFormat {
     }
   }
 
-  /** MEASURED per-file zone map of the CURRENT snapshot: one row per
-    * (data file, integer-typed leaf column) with min/max/null-count
-    * read from the parquet FOOTERS — no data pages touched, cost is
-    * one footer round-trip per file, run distributed (bounded driver
-    * listing, the TarShardSink manifest shape). INT64/INT32 columns
-    * only (keys, ids, dates-as-days — what a 100 TB table actually
-    * prunes on); a column missing stats in ANY row group of a file is
-    * omitted for that file, so every reported range is a TRUE bound.
-    * This is a31's zone map as working engine machinery instead of an
-    * effectiveness prediction — [[readPruned]] consumes it. */
-  def fileStats(spark: SparkSession, table: String): Option[DataFrame] = {
-    import spark.implicits._
-    val fs = fsOf(spark, table)
-    currentSnapshot(spark, table).map { snap =>
-      val files = snapFiles(fs, snap)
-      val bconf = spark.sparkContext.broadcast(
-        new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
-      val slices = math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
-      spark.sparkContext.parallelize(files, slices)
-        .flatMap(p => footerStats(new Path(p), bconf.value.value).map {
-          case (col, mn, mx, nulls, rows) =>
-            (new Path(p).getName, col, mn, mx, nulls, rows)
-        })
-        .toDF("file", "column", "min_long", "max_long", "null_count", "n_rows")
-        .orderBy(org.apache.spark.sql.functions.col("file"),
-          org.apache.spark.sql.functions.col("column"))
-    }
-  }
-
-  /** Data files of a snapshot dir (parquet parts only, no markers). */
-  private def dataFiles(fs: FileSystem, dataDir: Path): Seq[String] =
-    ParquetFooters.dataFiles(fs, dataDir)
-
-  private def footerStats(path: Path,
-                          conf: Configuration): Seq[(String, Long, Long, Long, Long)] =
-    ParquetFooters.footerStats(path, conf)
-
-  /** Distributed footer-predicate evaluation: which of `files` does
-    * `keep` admit? One footer round-trip per file, fanned across the
-    * cluster (the fileStats shape) — at the 100 TB/many-file scale a
-    * sequential driver loop here is O(files) serial round-trips on the
-    * QUERY path, which is exactly where pruning must stay cheap. The
-    * collected result is file NAMES only — bounded by the snapshot's
-    * file count, the same driver-grain as the listing itself. */
-  private[sources] def keptFiles(spark: SparkSession, files: Seq[String],
-                                 keep: (Path, Configuration) => Boolean): Seq[String] = {
-    if (files.isEmpty) Seq.empty
-    else {
-      val bconf = spark.sparkContext.broadcast(
-        new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
-      val slices = math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
-      spark.sparkContext.parallelize(files, slices)
-        .filter(p => keep(new Path(p), bconf.value.value))
-        .collect().toSeq.sorted
-    }
-  }
-
   /** Name of the per-dir persisted-stats sidecar — a parquet dir
     * INSIDE each data dir. The underscore prefix hides it from
     * Spark's file index, so every plain parquet read of the data dir
@@ -1558,43 +1465,41 @@ object CommitLogTableFormat extends TableFormat {
     val files = ParquetFooters.dataFiles(fs, dir)
     if (files.isEmpty) Some(Map.empty)
     else {
-      def rowsOf(p: String, conf: Configuration) = {
-        val path = new Path(p); val name = path.getName
-        ParquetFooters.footerStats(path, conf).map { case (c, mn, mx, nulls, n) =>
+      def statsOf(p: String, conf: Configuration) =
+        new Path(p).getName -> ParquetFooters.fileColStats(new Path(p), conf)
+      def rowsOf(name: String, st: ParquetFooters.FileColStats) =
+        st.longs.toSeq.sortBy(_._1).map { case (c, (mn, mx, nulls, n)) =>
           (name, c, "long", Option(mn), Option(mx),
             Option.empty[String], Option.empty[String], nulls, n)
-        } ++ ParquetFooters.footerStringStats(path, conf).map {
-          case (c, lo, hi, nulls, n) =>
-            (name, c, "string", Option.empty[Long], Option.empty[Long],
-              Option(lo), Option(hi), nulls, n)
+        } ++ st.strs.toSeq.sortBy(_._1).map { case (c, (lo, hi, nulls, n)) =>
+          (name, c, "string", Option.empty[Long], Option.empty[Long],
+            Option(lo), Option(hi), nulls, n)
         }
-      }
       // small dirs (the micro-batch/test grain) measure driver-side
       // AND persist driver-side: the rows are already in driver
       // memory, so routing them through a Spark write job pays a full
       // job + commit-protocol round trip (~150 ms, r16 measured) to
       // store a handful of rows. Metadata writes never spin up the
       // cluster — the Delta/Iceberg commit discipline. Big dirs fan
-      // out like fileStats and keep the distributed write. Only the
-      // driver-side path returns the stats (keyed `<dir>/<file>`, as
-      // [[snapshotFileStats]] reads them back) for [[seedMeta]].
+      // out one footer walk per file and keep the distributed write.
+      // Only the driver-side path returns the stats (keyed
+      // `<dir>/<file>`, as [[snapshotFileStats]] reads them back from
+      // the sidecar, where a file without a bound has no row) for
+      // [[seedMeta]].
       if (files.size <= 8) {
-        val rows = files.flatMap(p => rowsOf(p, spark.sparkContext.hadoopConfiguration))
-        writeSidecarLocal(spark.sparkContext.hadoopConfiguration, dir, rows)
-        Some(rows.groupBy(_._1).map { case (file, rs) =>
-          s"$dataName/$file" -> ParquetFooters.FileColStats(
-            rs.collect { case (_, c, "long", Some(mn), Some(mx), _, _, nulls, n) =>
-              c -> ((mn, mx, nulls, n)) }.toMap,
-            rs.collect { case (_, c, "string", _, _, Some(lo), Some(hi), nulls, n) =>
-              c -> ((lo, hi, nulls, n)) }.toMap)
-        })
+        val stats = files.map(p => statsOf(p, spark.sparkContext.hadoopConfiguration))
+        writeSidecarLocal(spark.sparkContext.hadoopConfiguration, dir,
+          stats.flatMap { case (name, st) => rowsOf(name, st) })
+        Some(stats.collect {
+          case (name, st) if st.longs.nonEmpty || st.strs.nonEmpty => s"$dataName/$name" -> st
+        }.toMap)
       } else {
         val bconf = spark.sparkContext.broadcast(
           new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
         val slices = math.max(1,
           math.min(files.size, spark.sparkContext.defaultParallelism))
         spark.sparkContext.parallelize(files, slices)
-          .flatMap(p => rowsOf(p, bconf.value.value))
+          .flatMap { p => val (name, st) = statsOf(p, bconf.value.value); rowsOf(name, st) }
           .toDF("file", "column", "kind", "min_long", "max_long",
             "lower", "upper", "null_count", "n_rows")
           .coalesce(1).write.mode("overwrite")
@@ -1756,7 +1661,7 @@ object CommitLogTableFormat extends TableFormat {
     * dirs without — computed ONCE per committed version, then a
     * driver map hit. A file neither source describes is simply absent
     * (pruners must KEEP it — the missing-stats contract). */
-  private[sources] def snapshotFileStats(spark: SparkSession,
+  private[graft] def snapshotFileStats(spark: SparkSession,
       snapshot: LakeSnapshot): Map[String, ParquetFooters.FileColStats] = {
     import org.apache.spark.sql.functions.expr
     val fs = fsOf(spark, snapshot.root)
@@ -1946,7 +1851,7 @@ object CommitLogTableFormat extends TableFormat {
       st => st.longs.get(column).forall { case (mn, mx, _, _) => !(mx < lo || mn > hi) })
 
   /** String-key variant of [[pruneSnap]]: bounds come from the
-    * truncated string zone map ([[ParquetFooters.footerStringStats]] —
+    * truncated string zone map ([[ParquetFooters.fileColStats]] —
     * Iceberg truncate-16 lower/upper), so the `source`/url/state keys
     * a city-data pipeline actually filters by prune too, not just
     * integer ids. Truncated bounds are conservative by construction;
@@ -1967,29 +1872,6 @@ object CommitLogTableFormat extends TableFormat {
   def prunedFilesString(spark: SparkSession, table: String, column: String,
                         lo: String, hi: String): Option[(Seq[String], Int)] =
     currentSnapshot(spark, table).map(pruneSnapString(spark, _, column, lo, hi))
-
-  /** MEASURED truncated-string zone map of the current snapshot — the
-    * string twin of [[fileStats]]: one row per (data file, string leaf
-    * column) with Iceberg-style lower/upper bounds from the parquet
-    * footers. */
-  def fileStatsStrings(spark: SparkSession, table: String): Option[DataFrame] = {
-    import spark.implicits._
-    val fs = fsOf(spark, table)
-    currentSnapshot(spark, table).map { snap =>
-      val files = snapFiles(fs, snap)
-      val bconf = spark.sparkContext.broadcast(
-        new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
-      val slices = math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
-      spark.sparkContext.parallelize(files, slices)
-        .flatMap(p => ParquetFooters.footerStringStats(new Path(p), bconf.value.value).map {
-          case (col, lower, upper, nulls, rows) =>
-            (new Path(p).getName, col, lower, upper, nulls, rows)
-        })
-        .toDF("file", "column", "lower_bound", "upper_bound", "null_count", "n_rows")
-        .orderBy(org.apache.spark.sql.functions.col("file"),
-          org.apache.spark.sql.functions.col("column"))
-    }
-  }
 
   /** The merge-on-read frame over an explicit KEPT file list of `snap`
     * (the tail both pruned reads share). Empty snapshots short-circuit:

@@ -5,18 +5,21 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared parquet FOOTER statistics walk (no data pages touched) —
-  * the measurement half of the zone-map machinery, used by
-  * [[CommitLogTableFormat.fileStats]] on snapshots and by
-  * [[ZOrderLayout]] on plain directories. */
+/** The lake's one parquet FOOTER statistics walk (no data pages
+  * touched) — the measurement half of the zone-map machinery:
+  * [[fileColStats]] measures a file's bounds for the commit-time
+  * `_stats` sidecar, for live snapshot stats of dirs without one
+  * ([[CommitLogTableFormat.snapshotFileStats]]), and for
+  * [[ZOrderLayout.pruneCount]] on plain directories. */
 private[graft] object ParquetFooters {
 
-  /** JVM-local diagnostic: how many parquet FOOTERS this walker has
-    * opened (incremented in [[footerStats]]/[[footerStringStats]],
-    * wherever they run — in local mode that is one JVM, which is what
-    * the persisted-stats spec needs: it asserts a pruned read over a
-    * stats-bearing snapshot opens ZERO data-file footers). Not a
-    * cluster-wide metric and never read by engine logic. */
+  /** JVM-local diagnostic: how many parquet FOOTERS the engine has
+    * opened (incremented in [[fileColStats]] and the DSv2 COUNT(*)
+    * replay, wherever they run — in local mode that is one JVM, which
+    * is what the footer-open specs need: a pruned read over a
+    * stats-bearing snapshot opens ZERO data-file footers, and a
+    * commit opens each new file's footer once). Not a cluster-wide
+    * metric and never read by engine logic. */
   val opens = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** One file's combined footer stats, the unit the pruners evaluate:
@@ -29,105 +32,80 @@ private[graft] object ParquetFooters {
   case class FileColStats(longs: Map[String, (Long, Long, Long, Long)],
                           strs: Map[String, (String, String, Long, Long)])
 
-  /** Live-measured [[FileColStats]] of one file (two footer reads). */
-  def fileColStats(path: Path, conf: Configuration): FileColStats =
-    FileColStats(
-      footerStats(path, conf).map(t => t._1 -> ((t._2, t._3, t._4, t._5))).toMap,
-      footerStringStats(path, conf).map(t => t._1 -> ((t._2, t._3, t._4, t._5))).toMap)
-
-  def dataFiles(fs: FileSystem, dataDir: Path): Seq[String] = {
-    val listed = fs.globStatus(new Path(dataDir, "*.parquet"))
-    if (listed == null) Seq.empty else listed.toSeq.map(_.getPath.toString)
-  }
-
-  /** Footer-only stats of one parquet file: for each INT64/INT32 leaf
-    * column with valid statistics in EVERY row group, the file-level
-    * (column, min, max, nulls, rows). */
-  def footerStats(path: Path,
-                  conf: Configuration): Seq[(String, Long, Long, Long, Long)] = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    opens.incrementAndGet()
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf))
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      val rows = blocks.map(_.getRowCount).sum
-      val perChunk = blocks.flatMap(_.getColumns.asScala.map { c =>
-        val tn = c.getPrimitiveType.getPrimitiveTypeName
-        val st = c.getStatistics
-        val ok = (tn == INT64 || tn == INT32) && st != null && !st.isEmpty &&
-          st.hasNonNullValue
-        (c.getPath.toDotString,
-          if (ok) Some((st.genericGetMin.asInstanceOf[Number].longValue,
-            st.genericGetMax.asInstanceOf[Number].longValue,
-            st.getNumNulls)) else None)
-      })
-      perChunk.groupBy(_._1).toSeq.collect {
-        // a true bound requires stats in EVERY row-group chunk
-        case (col, chunks) if chunks.forall(_._2.isDefined) =>
-          val s = chunks.flatMap(_._2)
-          (col, s.map(_._1).min, s.map(_._2).max, s.map(_._3).sum, rows)
-      }.sortBy(_._1)
-    } finally reader.close()
-  }
-
   /** How many leading chars of a string bound the zone map keeps —
     * the Iceberg `truncate(16)` convention: long enough to separate
     * real key domains (sources, states, URL hosts), short enough that
     * a footer row stays tiny at 100 TB file counts. */
   val StringBoundChars = 16
 
-  /** Footer-only STRING stats of one parquet file: for each
-    * string-annotated BINARY leaf column with valid statistics in
-    * EVERY row group, Iceberg-style truncated bounds —
-    * `lower` = min truncated to [[StringBoundChars]] (truncation only
-    * ever LOWERS a lower bound), `upper` = max truncated with its last
-    * kept char incremented when truncation dropped anything (so it
-    * stays a TRUE upper bound). Bounds with any non-ASCII byte are
-    * skipped for that file (the file is KEPT by every pruner —
-    * conservative): parquet orders binary stats by unsigned bytes
-    * while java.lang.String compares UTF-16 code units, and the two
-    * orders diverge outside ASCII, so only the ASCII range is safe to
-    * compare across the two systems. */
-  def footerStringStats(path: Path,
-                        conf: Configuration): Seq[(String, String, String, Long, Long)] = {
+  /** Live-measured [[FileColStats]] of one parquet file: ONE footer
+    * open, one pass over its column chunks. A column gets a bound only
+    * when EVERY row group carries usable stats for it (a true bound).
+    *  - `longs`: INT64/INT32 leaf columns, file-level (min, max).
+    *  - `strs`: string-annotated BINARY leaf columns, Iceberg-style
+    *    truncated bounds — `lower` = min truncated to
+    *    [[StringBoundChars]] (truncation only ever LOWERS a lower
+    *    bound), `upper` = max truncated with its last kept char
+    *    incremented when truncation dropped anything (so it stays a
+    *    TRUE upper bound). Bounds with any non-ASCII byte are skipped
+    *    for that file (the file is KEPT by every pruner —
+    *    conservative): parquet orders binary stats by unsigned bytes
+    *    while java.lang.String compares UTF-16 code units, and the two
+    *    orders diverge outside ASCII, so only the ASCII range is safe
+    *    to compare across the two systems.
+    * Both kinds carry the column's null count and the file's rows. */
+  def fileColStats(path: Path, conf: Configuration): FileColStats = {
     import scala.jdk.CollectionConverters._
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.BINARY
-    import org.apache.parquet.schema.LogicalTypeAnnotation
+    import org.apache.parquet.hadoop.metadata.ColumnChunkMetaData
+    import org.apache.parquet.io.api.Binary
+    import org.apache.parquet.schema.LogicalTypeAnnotation.StringLogicalTypeAnnotation
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT32, INT64}
     opens.incrementAndGet()
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf))
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      val rows = blocks.map(_.getRowCount).sum
-      val perChunk = blocks.flatMap(_.getColumns.asScala.map { c =>
-        val pt = c.getPrimitiveType
-        val isString = pt.getPrimitiveTypeName == BINARY &&
-          pt.getLogicalTypeAnnotation != null &&
-          pt.getLogicalTypeAnnotation.isInstanceOf[
-            LogicalTypeAnnotation.StringLogicalTypeAnnotation]
+    val blocks = try reader.getFooter.getBlocks.asScala.toSeq finally reader.close()
+    val rows = blocks.map(_.getRowCount).sum
+    val chunks = blocks.flatMap(_.getColumns.asScala)
+    def hasStats(c: ColumnChunkMetaData): Boolean = {
+      val st = c.getStatistics
+      st != null && !st.isEmpty && st.hasNonNullValue
+    }
+    def longBound(c: ColumnChunkMetaData): Option[(Long, Long, Long)] = {
+      val tn = c.getPrimitiveType.getPrimitiveTypeName
+      if ((tn == INT64 || tn == INT32) && hasStats(c)) {
         val st = c.getStatistics
-        val ok = isString && st != null && !st.isEmpty && st.hasNonNullValue
-        val bounds =
-          if (!ok) None
-          else {
-            val mn = st.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes
-            val mx = st.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes
-            if (mn.exists(_ < 0) || mx.exists(_ < 0)) None // non-ASCII: skip
-            else Some((new String(mn, "US-ASCII"), new String(mx, "US-ASCII"),
-              st.getNumNulls))
-          }
-        (c.getPath.toDotString, bounds)
-      })
-      perChunk.groupBy(_._1).toSeq.collect {
-        // a true bound requires comparable stats in EVERY row-group chunk
-        case (col, chunks) if chunks.forall(_._2.isDefined) =>
-          val s = chunks.flatMap(_._2)
-          (col, truncateLower(s.map(_._1).min), truncateUpper(s.map(_._2).max),
-            s.map(_._3).sum, rows)
-      }.sortBy(_._1)
-    } finally reader.close()
+        Some((st.genericGetMin.asInstanceOf[Number].longValue,
+          st.genericGetMax.asInstanceOf[Number].longValue, st.getNumNulls))
+      } else None
+    }
+    def stringBound(c: ColumnChunkMetaData): Option[(String, String, Long)] = {
+      val pt = c.getPrimitiveType
+      if (pt.getPrimitiveTypeName == BINARY && hasStats(c) &&
+          pt.getLogicalTypeAnnotation.isInstanceOf[StringLogicalTypeAnnotation]) {
+        val st = c.getStatistics
+        val mn = st.genericGetMin.asInstanceOf[Binary].getBytes
+        val mx = st.genericGetMax.asInstanceOf[Binary].getBytes
+        if (mn.exists(_ < 0) || mx.exists(_ < 0)) None // non-ASCII: skip
+        else Some((new String(mn, "US-ASCII"), new String(mx, "US-ASCII"), st.getNumNulls))
+      } else None
+    }
+    // a true bound requires usable stats in EVERY row-group chunk
+    def everyChunk[B](bound: ColumnChunkMetaData => Option[B]): Map[String, Seq[B]] =
+      chunks.groupBy(_.getPath.toDotString).flatMap { case (col, cs) =>
+        val bs = cs.map(bound)
+        if (bs.forall(_.isDefined)) Some(col -> bs.flatten) else None
+      }
+    FileColStats(
+      everyChunk(longBound).map { case (col, s) =>
+        col -> ((s.map(_._1).min, s.map(_._2).max, s.map(_._3).sum, rows)) },
+      everyChunk(stringBound).map { case (col, s) =>
+        col -> ((truncateLower(s.map(_._1).min), truncateUpper(s.map(_._2).max),
+          s.map(_._3).sum, rows)) })
+  }
+
+  def dataFiles(fs: FileSystem, dataDir: Path): Seq[String] = {
+    val listed = fs.globStatus(new Path(dataDir, "*.parquet"))
+    if (listed == null) Seq.empty else listed.toSeq.map(_.getPath.toString)
   }
 
   /** Truncation only lowers a LOWER bound — always safe. */
@@ -142,23 +120,6 @@ private[graft] object ParquetFooters {
       val t = s.take(StringBoundChars)
       t.init + (t.last + 1).toChar
     }
-
-  /** Per-(file, column) footer stats of every parquet file under
-    * `dir`, walked distributed (bounded driver listing). */
-  def stats(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = dataFiles(fs, new Path(dir))
-    val bconf = spark.sparkContext.broadcast(
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
-    val slices = math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
-    spark.sparkContext.parallelize(files, slices)
-      .flatMap(p => footerStats(new Path(p), bconf.value.value).map {
-        case (c, mn, mx, nulls, rows) => (new Path(p).getName, c, mn, mx, nulls, rows)
-      })
-      .toDF("file", "column", "min_long", "max_long", "null_count", "n_rows")
-      .orderBy(col("file"), col("column"))
-  }
 }
 
 /** Z-order (Morton) layout EXECUTOR — a30 plans this pass at the
@@ -167,8 +128,8 @@ private[graft] object ParquetFooters {
   * EITHER key is tight, and a two-key box predicate prunes to
   * O(√files) instead of all of them (Delta/Iceberg OPTIMIZE ZORDER BY
   * semantics). The loop closes end-to-end in this repo: a30 plans →
-  * [[write]] executes → [[ParquetFooters.stats]] measures the ranges →
-  * [[CommitLogTableFormat.readPruned]]-style range tests prune.
+  * [[write]] executes → [[pruneCount]] measures the footer ranges
+  * ([[ParquetFooters.fileColStats]]) and range-tests them.
   *
   * Scale shape: ONE range-shuffle on the z-value (repartitionByRange —
   * Spark samples split points, so files are balanced under skew) plus
@@ -207,10 +168,9 @@ object ZOrderLayout {
     val files = ParquetFooters.dataFiles(fs, new Path(dir))
     val conf = spark.sparkContext.hadoopConfiguration
     val kept = files.count { p =>
-      val st = ParquetFooters.footerStats(new Path(p), conf)
-        .map(s => s._1 -> (s._2, s._3)).toMap
+      val st = ParquetFooters.fileColStats(new Path(p), conf).longs
       def admits(k: String, lo: Long, hi: Long): Boolean = st.get(k) match {
-        case Some((mn, mx)) => !(mx < lo || mn > hi)
+        case Some((mn, mx, _, _)) => !(mx < lo || mn > hi)
         case None => true
       }
       admits(keyA, loA, hiA) && admits(keyB, loB, hiB)

@@ -305,13 +305,13 @@ class SourcesStreamingSpec extends GraftSpec {
     val df = (0L until 100L).map(k => (k, s"row$k")).toDF("k", "v")
       .repartitionByRange(4, $"k")
     fmt.commit(spark, dir, df, "a")
-    val stats = fmt.fileStats(spark, dir).get
-      .filter($"column" === "k")
-      .as[(String, String, Long, Long, Long, Long)].collect()
+    // per-file (min, max, nulls, rows) of `k` from the cached stats map
+    val stats = fmt.snapshotFileStats(spark, fmt.currentSnapshot(spark, dir).get)
+      .values.flatMap(_.longs.get("k")).toArray
     assert(stats.length == 4, stats.mkString(", "))
-    assert(stats.map(_._6).sum == 100L && stats.forall(_._5 == 0L))
+    assert(stats.map(_._4).sum == 100L && stats.forall(_._3 == 0L))
     // ranges are disjoint and cover 0..99
-    val ranges = stats.map(s => (s._3, s._4)).sortBy(_._1)
+    val ranges = stats.map(s => (s._1, s._2)).sortBy(_._1)
     assert(ranges.head._1 == 0L && ranges.last._2 == 99L)
     ranges.sliding(2).foreach { case Array((_, hi), (lo, _)) =>
       assert(hi < lo, s"overlap: $hi vs $lo")
@@ -354,10 +354,10 @@ class SourcesStreamingSpec extends GraftSpec {
       rows.toDF("k", "source", "v").repartitionByRange(3, $"source")
         .sortWithinPartitions($"source"), "a")
     // measured truncated bounds: every bound is a TRUE bound
-    val stats = fmt.fileStatsStrings(spark, dir).get
-      .filter($"column" === "source")
-      .select($"file", $"lower_bound", $"upper_bound")
-      .as[(String, String, String)].collect()
+    val stats = fmt.snapshotFileStats(spark, fmt.currentSnapshot(spark, dir).get)
+      .toSeq.flatMap { case (file, st) =>
+        st.strs.get("source").map { case (lower, upper, _, _) => (file, lower, upper) }
+      }
     assert(stats.nonEmpty)
     stats.foreach { case (_, lower, upper) =>
       assert(lower.length <= 16 && upper.length <= 16)
