@@ -187,10 +187,7 @@ object Bench {
     // shared caches, stop Spark — and only THEN print, so the JSON line
     // is the last stdout this JVM produces.
     spark.sparkContext.setLogLevel("ERROR")
-    graft.operators.DedupOps.release(spark, sfDir)
-    graft.operators.VectorOps.release(spark, sfDir)
-    graft.operators.CorpusOps.release(spark, sfDir)
-    graft.operators.TextOps.release(spark, sfDir)
+    graft.operators.SessionMemo.release(spark, sfDir)
     spark.stop()
     println(line)
   }

@@ -51,10 +51,7 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // cache lifecycle contract: jobs release their shared subplans
-    graft.operators.DedupOps.release(spark, sfDir)
-    graft.operators.VectorOps.release(spark, sfDir)
-    graft.operators.CorpusOps.release(spark, sfDir)
-    graft.operators.TextOps.release(spark, sfDir)
+    graft.operators.SessionMemo.release(spark, sfDir)
     spark.stop()
   }
 }

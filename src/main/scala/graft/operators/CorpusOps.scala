@@ -294,38 +294,15 @@ object CorpusOps {
 
   /** One materialized component labeling per (session, dir) — d25 is
     * iterative, so rebuilding it per reference would redo the loop.
-    * Keyed on session IDENTITY (eq), matching the DedupOps/VectorOps
-    * convention — applicationId would alias two sessions in one app.
-    * The Set is the checkpoint-block RDD ids [[release]] must free. */
-  private val ccCache = scala.collection.mutable.ListBuffer[((SparkSession, String), (DataFrame, Set[Int]))]()
+    * Releasing the entry ([[SessionMemo.release]]) frees the final
+    * round's checkpoint blocks. */
+  private def sharedClusters(spark: SparkSession, dir: String): DataFrame =
+    SessionMemo.value(spark, dir, "corpus.cc")(
+      connectedComponents(spark, DedupOps.sharedVerifiedPairs(spark, dir)))(
+      built => dropIds(spark, built._2))._1
 
-  private def sharedClusters(spark: SparkSession, dir: String): DataFrame = ccCache.synchronized {
-    ccCache.find(e => (e._1._1 eq spark) && e._1._2 == dir).map(_._2._1).getOrElse {
-      val built = connectedComponents(spark, DedupOps.sharedVerifiedPairs(spark, dir))
-      ccCache += (((spark, dir), built))
-      built._1
-    }
-  }
-
-  private def dropEntries(keep: ((SparkSession, String)) => Boolean): Unit = {
-    val (kept, dropped) = ccCache.partition(e => keep(e._1))
-    dropped.foreach { case ((spark, _), (_, ids)) =>
-      ids.foreach(id =>
-        spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = true)))
-    }
-    ccCache.clear()
-    ccCache ++= kept
-  }
-
-  /** Release d25's cached labels for one (session, dir) job. */
-  def release(spark: SparkSession, dir: String): Unit = ccCache.synchronized {
-    dropEntries { case (s, d) => !((s eq spark) && d == dir) }
-  }
-
-  /** Release every cached frame belonging to a session (test teardown). */
-  def releaseSession(spark: SparkSession): Unit = ccCache.synchronized {
-    dropEntries { case (s, _) => !(s eq spark) }
-  }
+  /** Releases every operator family's shared artifacts for (session, dir). */
+  def release(spark: SparkSession, dir: String): Unit = SessionMemo.release(spark, dir)
 
   /** d25: duplicate-group clustering — connected components over the
     * verified MinHash near-dup pairs (d6), labeling every involved

@@ -53,55 +53,22 @@ object DedupOps {
     explodedShingles(spark, dir)
       .select(col("doc_id"), xxhash64(col("shingle")).as("shingle"))
 
-  private val subplanCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
+  /** Releases every operator family's shared artifacts for (session, dir). */
+  def release(spark: SparkSession, dir: String): Unit = SessionMemo.release(spark, dir)
 
-  /** Memoize + persist a shared subplan per (session, dataset, key).
+  /** Materialized-once form of [[explodedShingleHashes]].
     *
     * d6/d8 reference the shingle pipeline from several subplans
     * (signature agg, bucket self-join, exact-Jaccard verify, per-doc
     * sizes); without materialization Catalyst re-evaluates the
     * tokenize→shingle→hash pipeline at every reference — at 100 TB that
-    * is tokenizing the corpus ~8×. One persist bounds each shared stage
-    * to a single computation per job; consumers read the columnar cache
-    * (DISK-spillable — the cluster analogue is a checkpoint to the
-    * shuffle service / object store). The memo also spans queries, so
-    * d8 after d6 pays zero shingle cost. */
-  private[operators] def shared(spark: SparkSession, dir: String, key: String)
-                    (build: => DataFrame): DataFrame = subplanCache.synchronized {
-    // reentrant (shared stages build on each other), hence not computeIfAbsent
-    val k = (spark, dir, key)
-    Option(subplanCache.get(k)).getOrElse {
-      val df = build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      subplanCache.put(k, df)
-      df
-    }
-  }
-
-  /** Release every cached subplan for (session, dataset): unpersist the
-    * backing blocks and evict the memo entries. The cache lifecycle
-    * contract: a job that used the dedup family over `dir` calls this
-    * when done (Verify/Bench teardown do), so a long-lived session
-    * processing many datasets neither pins corpus-scale cached blocks
-    * indefinitely nor serves stale results after data under `dir`
-    * changes. */
-  def release(spark: SparkSession, dir: String): Unit = subplanCache.synchronized {
-    import scala.jdk.CollectionConverters._
-    subplanCache.keySet().asScala
-      .filter(k => (k._1 eq spark) && k._2 == dir).toSeq
-      .foreach(k => subplanCache.remove(k).unpersist(blocking = true))
-  }
-
-  /** Release all cached subplans owned by `spark` (session shutdown). */
-  def releaseSession(spark: SparkSession): Unit = subplanCache.synchronized {
-    import scala.jdk.CollectionConverters._
-    subplanCache.keySet().asScala.filter(_._1 eq spark).toSeq
-      .foreach(k => subplanCache.remove(k).unpersist(blocking = true))
-  }
-
-  /** Materialized-once form of [[explodedShingleHashes]]. */
+    * is tokenizing the corpus ~8×. One persist ([[SessionMemo.frame]])
+    * bounds each shared stage to a single computation per job (the
+    * cluster analogue is a checkpoint to the shuffle service / object
+    * store). The memo also spans queries, so d8 after d6 pays zero
+    * shingle cost. */
   def sharedShingleHashes(spark: SparkSession, dir: String): DataFrame =
-    shared(spark, dir, "shingles")(explodedShingleHashes(spark, dir))
+    SessionMemo.frame(spark, dir, "dedup.shingles")(explodedShingleHashes(spark, dir))
 
   /** doc_id → (128-long minhash signature, distinct-shingle count) in
     * ONE aggregation pass over the shingle cache. Folding the count into
@@ -110,7 +77,7 @@ object DedupOps {
     * exchange — d6 ends up with exactly two doc_id shuffles per job:
     * the shingle window and this aggregate. */
   def sharedSignatures(spark: SparkSession, dir: String): DataFrame =
-    shared(spark, dir, "sigs")(
+    SessionMemo.frame(spark, dir, "dedup.sigs")(
       sharedShingleHashes(spark, dir)
         .groupBy(col("doc_id"))
         .agg(call_function("minhash128", col("shingle")).as("sig"),
@@ -157,7 +124,7 @@ object DedupOps {
     * on both sides, so the 128-seed signature aggregation runs exactly
     * once per job. */
   def bandBuckets(spark: SparkSession, dir: String): DataFrame =
-    shared(spark, dir, "bands") {
+    SessionMemo.frame(spark, dir, "dedup.bands") {
       val sigs = minhashSignatures(spark, dir)
       val bandCols = (0 until NumBands).map { j =>
         val rows = (j * RowsPerBand until (j + 1) * RowsPerBand)
@@ -177,7 +144,7 @@ object DedupOps {
     * reads a tiny (doc_a, doc_b, jaccard) frame. Released with the rest
     * of the shared lifecycle. */
   def sharedVerifiedPairs(spark: SparkSession, dir: String): DataFrame =
-    shared(spark, dir, "pairs") {
+    SessionMemo.frame(spark, dir, "dedup.pairs") {
       val buckets = bandBuckets(spark, dir)
       val cand = buckets.as("x").join(buckets.as("y"), col("x.bh") === col("y.bh"))
         .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
@@ -242,7 +209,7 @@ object DedupOps {
     * frame; without the cache the token-md5-aggregate pipeline (the
     * entire d7 cost) evaluates TWICE per run. */
   def sharedSimhashes(spark: SparkSession, dir: String): DataFrame =
-    shared(spark, dir, "simhash")(simhashes(spark, dir))
+    SessionMemo.frame(spark, dir, "dedup.simhash")(simhashes(spark, dir))
 
   /** Scale guard for the band self-join: a 16-bit band key space is
     * only 65,536 buckets, so bucket population grows linearly with the
@@ -288,7 +255,7 @@ object DedupOps {
         .withColumn("salt", when(col("bsz") > maxBucket, saltBits).otherwise(lit(-1L)))
         .withColumn("rnk", row_number().over(wB))
     }
-    if (maxBucket == MaxBucketSize) shared(spark, dir, "simbands")(build) else build
+    if (maxBucket == MaxBucketSize) SessionMemo.frame(spark, dir, "dedup.simbands")(build) else build
   }
 
   /** Cap observability (VERDICT r2 #6): one row with the number of
@@ -692,7 +659,7 @@ object DedupOps {
     * full-prefix window). ONE exchange on doc_id serves the gram
     * windows, the count, and the selection sort. */
   def sharedWinnowFps(spark: SparkSession, dir: String): DataFrame =
-    shared(spark, dir, "winnow")(winnowFpsOf(Tables.documents(spark, dir)))
+    SessionMemo.frame(spark, dir, "dedup.winnow")(winnowFpsOf(Tables.documents(spark, dir)))
 
   /** The winnow pipeline over ANY (doc_id, text) frame (property tests
     * drive it with planted shared runs to check the detection

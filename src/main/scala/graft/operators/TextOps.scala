@@ -819,13 +819,12 @@ object TextOps {
     * training documents that quote (or duplicate) eval data before a
     * training run does. */
   /** Contamination hits materialized ONCE per (session, dataset) in
-    * the shared-cache lifecycle (the d6 verified-pairs lesson applied
-    * here): the shingle equi-join runs once and its two consumers —
-    * d20's report and d35's funnel stage — read the tiny
-    * (doc_id, counts) frame. Released with the rest of the dedup
-    * caches. */
+    * [[SessionMemo]] (the d6 verified-pairs lesson applied here): the
+    * shingle equi-join runs once and its consumers — d20's report, d35's
+    * funnel stage and d56's cluster closure — read the tiny
+    * (doc_id, counts) frame. */
   private[operators] def sharedContamination(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.shared(spark, dir, "contam") {
+    SessionMemo.frame(spark, dir, "text.contam") {
       val docs = Tables.documents(spark, dir)
       contaminationAgainst(
         docs.filter(pmod(col("doc_id"), lit(97)) =!= 0),
@@ -1437,15 +1436,11 @@ object TextOps {
     * ALL k merges applied (persisted — the trained tokenizer's encoding
     * of every vocabulary type). d67 reads the merge table; d68 encodes
     * the corpus against the final segmentation. Training runs once per
-    * (session, dir); [[release]] / [[releaseSession]] evict (the
-    * DedupOps shared-subplan lifecycle, DedupOps.scala:59). */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Seq[(Int, String, String, String, Long)], DataFrame)]()
-
+    * (session, dir); releasing the [[SessionMemo]] entry unpersists the
+    * segmentation. */
   private[operators] def bpeTrained(spark: SparkSession, dir: String)
-      : (Seq[(Int, String, String, String, Long)], DataFrame) = bpeCache.synchronized {
-    val key = (spark, dir)
-    Option(bpeCache.get(key)).getOrElse {
+      : (Seq[(Int, String, String, String, Long)], DataFrame) =
+    SessionMemo.value(spark, dir, "text.bpe") {
       import org.apache.spark.storage.StorageLevel
       val base = Tables.documents(spark, dir)
         .select(explode(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0))).as("word"))
@@ -1486,26 +1481,11 @@ object TextOps {
           seg = applied
         }
       } catch { case t: Throwable => seg.unpersist(); throw t }
-      val out = (merges.result(), seg)
-      bpeCache.put(key, out)
-      out
-    }
-  }
+      (merges.result(), seg)
+    }(_._2.unpersist(blocking = true))
 
-  /** Evict the BPE artifacts for (session, dataset) — unpersist the
-    * final segmentation and drop the memo entry. Same contract as
-    * DedupOps.release: jobs that trained over `dir` call this when done
-    * (Verify/Bench teardown do). */
-  def release(spark: SparkSession, dir: String): Unit = bpeCache.synchronized {
-    Option(bpeCache.remove((spark, dir))).foreach(_._2.unpersist(blocking = true))
-  }
-
-  /** Release all BPE artifacts owned by `spark` (session shutdown). */
-  def releaseSession(spark: SparkSession): Unit = bpeCache.synchronized {
-    import scala.jdk.CollectionConverters._
-    bpeCache.keySet().asScala.filter(_._1 eq spark).toSeq
-      .foreach(k => bpeCache.remove(k)._2.unpersist(blocking = true))
-  }
+  /** Releases every operator family's shared artifacts for (session, dir). */
+  def release(spark: SparkSession, dir: String): Unit = SessionMemo.release(spark, dir)
 
   /** d68: BPE corpus encoding + per-source fertility audit — the
     * APPLICATION step closing d67's training loop (train → encode →

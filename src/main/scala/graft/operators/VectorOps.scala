@@ -362,61 +362,8 @@ object VectorOps {
     * is exact on floats, so no rounding ambiguity enters the floor. */
   val QuantScale = 1048576.0 // 2^20
 
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), Seq[(Int, Seq[Float])]]()
-
-  private val subplanCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
-  /** Memoize + persist a shared subplan per (session, dataset, key) —
-    * same contract as DedupOps.shared: one computation per job for
-    * frames referenced from several subplans, released via
-    * [[release]]. */
-  private def shared(spark: SparkSession, dir: String, key: String)
-                    (build: => DataFrame): DataFrame = subplanCache.synchronized {
-    val k = (spark, dir, key)
-    Option(subplanCache.get(k)).getOrElse {
-      val df = build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      subplanCache.put(k, df)
-      df
-    }
-  }
-
-  /** Evict every memoized index artifact for (session, dataset):
-    * centroid sets and corpus counts (small driver-side values) plus
-    * persisted shared subplans (unpersisted, blocking). The vector
-    * indexes are invalid once data under `dir` changes, so callers
-    * processing mutable datasets call this between loads — Verify and
-    * Bench do at teardown. */
-  def release(spark: SparkSession, dir: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    centroidCache.keySet().asScala
-      .filter(k => (k._1 eq spark) && k._2 == dir).toSeq
-      .foreach(centroidCache.remove)
-    pqCache.remove((spark, dir))
-    countCache.remove((spark, dir))
-    subplanCache.synchronized {
-      subplanCache.keySet().asScala
-        .filter(k => (k._1 eq spark) && k._2 == dir).toSeq
-        .foreach(k => subplanCache.remove(k).unpersist(blocking = true))
-    }
-  }
-
-  /** Release all cached artifacts owned by `spark` (session shutdown —
-    * parity with DedupOps.releaseSession). */
-  def releaseSession(spark: SparkSession): Unit = {
-    import scala.jdk.CollectionConverters._
-    centroidCache.keySet().asScala.filter(_._1 eq spark).toSeq
-      .foreach(centroidCache.remove)
-    pqCache.keySet().asScala.filter(_._1 eq spark).toSeq
-      .foreach(pqCache.remove)
-    countCache.keySet().asScala.filter(_._1 eq spark).toSeq
-      .foreach(countCache.remove)
-    subplanCache.synchronized {
-      subplanCache.keySet().asScala.filter(_._1 eq spark).toSeq
-        .foreach(k => subplanCache.remove(k).unpersist(blocking = true))
-    }
-  }
+  /** Releases every operator family's shared artifacts for (session, dir). */
+  def release(spark: SparkSession, dir: String): Unit = SessionMemo.release(spark, dir)
 
   /** In-row nearest-centroid id over broadcast literal centroids:
     * greatest() over (csim, -cid) structs — pure projection, ZERO
@@ -454,7 +401,7 @@ object VectorOps {
   def centroidVectors(spark: SparkSession, dir: String,
                       iters: Int = LloydIters,
                       sampleRate: Double = 1.0): Seq[(Int, Seq[Float])] =
-    centroidCache.computeIfAbsent((spark, dir, s"$iters@$sampleRate"), { _ =>
+    SessionMemo.value(spark, dir, s"vector.centroids.$iters@$sampleRate") {
       require(sampleRate > 0.0 && sampleRate <= 1.0, s"sampleRate $sampleRate outside (0, 1]")
       val emb = Tables.embeddings(spark, dir)
       // seed hash operates on vec_id mod 2^31: keeps the Knuth product
@@ -499,7 +446,7 @@ object VectorOps {
         // from the previous round instead of collapsing to no centroids
         if (upd.isEmpty) cents else upd
       }
-    })
+    }(_ => ())
 
   /** d12: IVF ANN — inverted lists over Lloyd-refined centroids with
     * multiprobe; the 100 TB scale path. Index pass: nearest-centroid
@@ -709,12 +656,8 @@ object VectorOps {
 
   /** Corpus vector count, memoized per (session, dataset) — one cheap
     * count() at index time drives the auto-P decision. */
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]()
-
   private def corpusCount(spark: SparkSession, dir: String): Long =
-    countCache.computeIfAbsent((spark, dir),
-      _ => Tables.embeddings(spark, dir).count()).longValue()
+    SessionMemo.value(spark, dir, "vector.count")(Tables.embeddings(spark, dir).count())(_ => ())
 
   /** Materialized-once bucketed rows for the canonical embeddings
     * table: both sides of the candidate self-join and the cap-stats
@@ -722,7 +665,7 @@ object VectorOps {
     * bucketing projection per reference. */
   private def sharedDupBuckets(spark: SparkSession, dir: String): DataFrame = {
     val planes = dupPlanesFor(corpusCount(spark, dir))
-    shared(spark, dir, "dupbuckets")(
+    SessionMemo.frame(spark, dir, "vector.dupbuckets")(
       dupBucketedRows(Tables.embeddings(spark, dir), "vec_id", "embedding",
         planes, DupMaxBucket))
   }
@@ -932,7 +875,7 @@ object VectorOps {
     * argmax projection three times. */
   def d45SemDedup(spark: SparkSession, dir: String): DataFrame = {
     val cents = centroidVectors(spark, dir)
-    val assigned = shared(spark, dir, "semassign") {
+    val assigned = SessionMemo.frame(spark, dir, "vector.semassign") {
       Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"),
           nearestCid(cents, col("embedding")).as("cid"))
@@ -1049,9 +992,6 @@ object VectorOps {
       struct(l2sq(sub, floatArrayLit(ce)).as("d"), lit(code).as("c"))
     }: _*).getField("c")
 
-  private val pqCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[Seq[(Int, Seq[Float])]]]()
-
   /** All [[PqSubspaces]] codebooks, trained together and memoized: seed
     * vectors (smallest Knuth hash — the d12 idiom, one bounded collect
     * shared by every subspace) then [[PqLloydIters]] rounds of quantized
@@ -1059,9 +999,8 @@ object VectorOps {
     * to the driver; the corpus never shuffles. Empty codes drop (k
     * shrinks) — the oracle replays that too. */
   private[operators] def pqCodebooks(spark: SparkSession, dir: String)
-      : Seq[Seq[(Int, Seq[Float])]] = pqCache.synchronized {
-    val key = (spark, dir)
-    Option(pqCache.get(key)).getOrElse {
+      : Seq[Seq[(Int, Seq[Float])]] =
+    SessionMemo.value(spark, dir, "vector.pq") {
       val emb = Tables.embeddings(spark, dir)
       val seedRows = emb
         .withColumn("h",
@@ -1073,7 +1012,7 @@ object VectorOps {
         .zipWithIndex
         .map { case (r, i) => i -> r.getSeq[Float](0) }
         .toSeq
-      val out = (0 until PqSubspaces).map { m =>
+      (0 until PqSubspaces).map { m =>
         val seeds = seedRows.map { case (code, v) =>
           code -> v.slice(m * PqSubDim, (m + 1) * PqSubDim) }
         (1 to PqLloydIters).foldLeft(seeds) { (cb, _) =>
@@ -1095,10 +1034,7 @@ object VectorOps {
           if (upd.isEmpty) cb else upd
         }
       }
-      pqCache.put(key, out)
-      out
-    }
-  }
+    }(_ => ())
 
   /** d69: PQ asymmetric-distance ANN — the MEMORY-bounded scale path the
     * IVF family (d12/d17) doesn't cover: 64 float32 components (256 B)

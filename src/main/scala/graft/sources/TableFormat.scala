@@ -692,7 +692,14 @@ object CommitLogTableFormat extends TableFormat {
       // purge contract as full compact) — read with the snapshot's
       // union schema because the rewritten set may span an append-time
       // schema evolution
-      val src = readDirs(spark, snap, rewrite)
+      // each rewritten dir's files in name order, not in the order the
+      // dir lists them: the scan packs equal-length files in the order
+      // it gets them, and a local dir lists in a hash order of names
+      // that carry a per-write UUID, so the merged layout would change
+      // from run to run
+      val filesOf = snapshotFilesCached(spark, snap).groupBy(f => new Path(f).getParent.getName)
+      val src = spark.read.schema(snapshotSchema(spark, snap))
+        .parquet(rewrite.flatMap(d => filesOf.getOrElse(d, Nil).sorted): _*)
       val purged =
         if (!rewrite.exists(hitDirs)) src
         else minusDv(withRowKey(src), dvRowsIn(rewrite)).drop("__graft_file", "__graft_pos")

@@ -25,6 +25,20 @@ class OperatorSpec extends GraftSpec {
     assert(missing.isEmpty, s"oracles without queries: $missing")
   }
 
+  test("SparkEntry merges the eight module registries once and refuses a name registered twice") {
+    val queries = Seq(Analytics.queries, Etl.queries, Events.queries, TextOps.queries,
+      DedupOps.queries, VectorOps.queries, MultimodalOps.queries, CorpusOps.queries)
+    val oracles = Seq(Analytics.oracles, Etl.oracles, Events.oracles, TextOps.oracles,
+      DedupOps.oracles, VectorOps.oracles, MultimodalOps.oracles, CorpusOps.oracles)
+    assert(queries.map(_.size).sum == SparkEntry.queries.size)
+    assert(SparkEntry.queries.size == 367)
+    assert(oracles.map(_.size).sum == SparkEntry.oracleSql.size)
+    assert((SparkEntry.queries eq SparkEntry.queries) && (SparkEntry.oracleSql eq SparkEntry.oracleSql))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.merged(Seq(Map("a1" -> 1, "d6" -> 2), Map("d6" -> 3))))
+    assert(e.getMessage.contains("d6"))
+  }
+
   test("no query plans a CartesianProduct; nested-loop joins only where designed") {
     // BroadcastNestedLoopJoin is legitimate ONLY for broadcast-scalar or
     // non-equi-broadcast shapes; anything else is a scale killer.
@@ -781,7 +795,7 @@ class OperatorSpec extends GraftSpec {
     val tinyPairs = DedupOps.d7Pairs(spark, dir01, maxBucket = 1)
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(tinyPairs.subsetOf(defPairs), "salted/capped run must not invent pairs")
-    DedupOps.release(spark, dir01)
+    SessionMemo.release(spark, dir01)
   }
 
   test("native cosine_sim expression is bit-identical to the HOF fold") {
@@ -995,7 +1009,7 @@ class OperatorSpec extends GraftSpec {
     assert(rS >= rF * 0.9, s"sampled recall=$rS fell >10% below full-pass=$rF")
     // determinism: the hash sample is row-local state-free — same rows,
     // same centroids, bit-for-bit, on any rerun
-    VectorOps.release(spark, sfDir)
+    SessionMemo.release(spark, sfDir)
     val again = pairs(VectorOps.ivfWithCentroids(spark, sfDir,
       VectorOps.centroidVectors(spark, sfDir, sampleRate = 0.5)))
     assert(again == sampled, "sampled refinement is not deterministic across reruns")
@@ -1021,7 +1035,7 @@ class OperatorSpec extends GraftSpec {
     val recall = (brute & pq).size.toDouble / brute.size
     assert(recall >= 0.4, s"PQ recall@5 vs exact = $recall below floor")
     // determinism: retrain from scratch → bit-identical result set
-    VectorOps.release(spark, sfDir)
+    SessionMemo.release(spark, sfDir)
     assert(pairs(VectorOps.d69AnnPq(spark, sfDir)) == pq,
       "PQ pipeline is not deterministic across retrains")
   }
@@ -1217,22 +1231,21 @@ class OperatorSpec extends GraftSpec {
 
   test("DedupOps/VectorOps release unpins every cached block for the dataset") {
     // start from a clean slate: earlier specs may have warmed the cache
-    DedupOps.release(spark, sfDir)
-    VectorOps.release(spark, sfDir)
+    SessionMemo.release(spark, sfDir)
     val before = spark.sparkContext.getPersistentRDDs.keySet
     DedupOps.d6DedupMinhash(spark, sfDir).count()
     VectorOps.d12AnnIvf(spark, sfDir).count()
     val mine = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(mine.nonEmpty, "expected the shared subplan cache to persist blocks")
+    // either family's release frees both families' artifacts
     DedupOps.release(spark, sfDir)
-    VectorOps.release(spark, sfDir)
     // only this test's blocks are asserted gone — parallel suites may
     // legitimately persist their own frames meanwhile
     val leaked = spark.sparkContext.getPersistentRDDs.keySet & mine
     assert(leaked.isEmpty, s"leaked persisted RDDs: $leaked")
     // released ⇒ next call rebuilds rather than serving an evicted frame
     assert(DedupOps.d6DedupMinhash(spark, sfDir).count() >= 0)
-    DedupOps.release(spark, sfDir)
+    SessionMemo.release(spark, sfDir)
   }
 
   test("d23: chunksOf cuts 1-based non-overlapping windows with a partial tail") {
@@ -1306,17 +1319,16 @@ class OperatorSpec extends GraftSpec {
       if c != a && !adj(a).contains(c)
     } yield (a, c)
     chained.foreach { case (a, c) => assert(lab(a)._1 == lab(c)._1) }
-    CorpusOps.release(spark, sfDir)
+    SessionMemo.release(spark, sfDir)
   }
 
   test("CorpusOps.release unpins the d25 label cache") {
-    CorpusOps.release(spark, sfDir)
+    SessionMemo.release(spark, sfDir)
     val before = spark.sparkContext.getPersistentRDDs.keySet
     CorpusOps.d25DedupClusters(spark, sfDir).count()
     val mine = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(mine.nonEmpty, "expected d25 to persist its label frame")
-    CorpusOps.release(spark, sfDir)
-    DedupOps.release(spark, sfDir) // d25 warms d6's shared subplans too
+    CorpusOps.release(spark, sfDir) // also frees the d6 subplans d25 warmed
     val leaked = spark.sparkContext.getPersistentRDDs.keySet & mine
     assert(leaked.isEmpty, s"leaked persisted RDDs: $leaked")
   }
@@ -1439,7 +1451,7 @@ class OperatorSpec extends GraftSpec {
     }
     // at most one winner per query
     assert(rows.map(_.getLong(0)).distinct.length == rows.length)
-    DedupOps.release(spark, sfDir)
+    SessionMemo.release(spark, sfDir)
   }
 
   test("q31 top-20 compiles to TakeOrderedAndProject, returns ≤ 20 rows") {
@@ -1497,7 +1509,7 @@ class OperatorSpec extends GraftSpec {
       .select(col("doc_a"), col("doc_b")).collect()
     val memberCount = pairs.flatMap(r => Seq(r.getLong(0), r.getLong(1))).distinct.length
     assert(rows.map(_.getLong(3)).sum == memberCount.toLong)
-    DedupOps.release(spark, sfDir)
+    SessionMemo.release(spark, sfDir)
   }
 
   test("multimodal decodeBatch preserves ids and emits fixed-width features") {
@@ -1574,7 +1586,7 @@ class OperatorSpec extends GraftSpec {
     }.toSet
     assert(dups.map(_.getLong(0)).toSet == expected)
     out.unpersist()
-    DedupOps.release(spark, sfDir)
+    SessionMemo.release(spark, sfDir)
   }
 
   test("d43 ngram LM: descending top-k, backoff and continuation invariants") {
@@ -2021,7 +2033,7 @@ class OperatorSpec extends GraftSpec {
       .count()
     assert(violations == 0L)
     out.unpersist()
-    VectorOps.release(spark, sfDir)
+    SessionMemo.release(spark, sfDir)
   }
 
   test("q41 interpolated quartiles: ordered, and the median matches a driver replay") {
@@ -2121,8 +2133,7 @@ class OperatorSpec extends GraftSpec {
     val frac = out.filter(col("split") === "train").count().toDouble / out.count()
     assert(frac > 0.6 && frac < 0.95)
     out.unpersist()
-    DedupOps.release(spark, sfDir)
-    CorpusOps.release(spark, sfDir)
+    SessionMemo.release(spark, sfDir)
   }
 
   test("e5 interleave pack: token accounting exact, local cumsum replay for one source") {
@@ -2166,8 +2177,7 @@ class OperatorSpec extends GraftSpec {
       assert(r.getBoolean(4) == (r.getLong(3) > 0))
     }
     out.unpersist()
-    DedupOps.release(spark, sfDir)
-    CorpusOps.release(spark, sfDir)
+    SessionMemo.release(spark, sfDir)
   }
 
   test("e4 format profile conserves blob count and byte mass vs the corpus") {
@@ -7633,12 +7643,9 @@ class OperatorSpec extends GraftSpec {
     // built in sorted-name order, family memo caches warming as it goes.
     // Earlier specs in a full-suite run pre-warm those caches (e.g. the
     // d103 spec materializes the shared cluster checkpoint, dropping
-    // d56's count to 0), so replay the generator's state: reset every
-    // family cache + the SQL cache, then walk the same sorted order.
-    CorpusOps.releaseSession(spark)
-    TextOps.releaseSession(spark)
-    DedupOps.releaseSession(spark)
-    VectorOps.releaseSession(spark)
+    // d56's count to 0), so replay the generator's state: reset the
+    // shared-artifact memo + the SQL cache, then walk the same sorted order.
+    SessionMemo.releaseSession(spark)
     spark.catalog.clearCache()
     val missing = SparkEntry.queries.keySet -- budgets.keySet
     assert(missing.isEmpty,

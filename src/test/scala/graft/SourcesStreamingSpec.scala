@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.operators.DedupOps
+import graft.operators.{DedupOps, SessionMemo}
 import graft.sources.{ColumnarSources, PartitionedSink, Sinks, SourceRegistry}
 import graft.streaming.StreamingOps
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -2306,7 +2306,7 @@ class SourcesStreamingSpec extends GraftSpec {
       assert(got == want)
       assert(got.size == incoming.length, "one flag row per incoming doc")
     } finally q.stop()
-    DedupOps.release(spark, sfDir)
+    SessionMemo.release(spark, sfDir)
     // Planted paraphrase: a corpus doc with its first token changed is
     // NOT an exact dup (admitAgainstCorpus would admit it) but must be
     // flagged here; an unrelated fresh doc must pass. Deterministic

@@ -130,4 +130,31 @@ class LakeParquetSpec extends graft.GraftSpec {
       assert(st.longs.keySet == Set("k") && st.strs.keySet == Set("s"))
     }
   }
+
+  test("compactDirs without clusterBy writes one layout for identically built tables") {
+    // uncompressed fixed-width columns give every 100-row file the same
+    // length, so the scan's packing order of the files is their order
+    // of arrival
+    // per merged file in name order: rows, and a hash of its keys in order
+    def layout(): Seq[(Int, Int)] = withConf("spark.sql.parquet.compression.codec", "uncompressed") {
+      val t = Files.createTempDirectory("graft_compact").toString + "/t"
+      def block(i: Int): DataFrame = spark.range(i * 400L, (i + 1) * 400L, 1L, 4).toDF("k")
+      fmt.commit(spark, t, block(0), "base")
+      (1 to 3).foreach(i => fmt.append(spark, t, block(i), s"a$i"))
+      // a different number of live rows in each file
+      fmt.erase(spark, t, col("k") % 100 < col("k") % 1300 / 100, "e1")
+      fmt.compactDirs(spark, t, fmt.currentSnapshot(spark, t).get.dataDirNames.tail, "k1",
+        targetFiles = 3)
+      val merged = new Path(t, fmt.currentSnapshot(spark, t).get.dataDirNames.last)
+      ParquetFooters.dataFiles(merged.getFileSystem(conf), merged).sorted
+        .map { f =>
+          val keys = spark.read.parquet(f).collect().map(_.getLong(0)).toSeq
+          (keys.size, keys.hashCode)
+        }
+    }
+    val first = layout()
+    val live = (400L until 1600L).count(k => k % 100 >= k % 1300 / 100.0)
+    assert(first.size == 3 && first.map(_._1).sum == live)
+    assert(layout() == first)
+  }
 }

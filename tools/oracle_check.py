@@ -5,7 +5,8 @@ Usage:
   python3 tools/oracle_check.py [--json <summary_path>] <verify_out_dir> [sf_dir] [name ...]
 
 --json writes a machine-readable summary ({"sf_dir", "total", "passed",
-"queries": {name: "pass" | "<failure reason>"}}) — the closing
+"queries": {name: "pass" | "<failure reason>"}, "seconds": {name:
+{"oracle", "read", "compare"}}}) — the closing
 discipline writes it to bench_results/correctness_rN_closing.json so a
 round's hard correctness signal survives even if the driver-side
 artifact ships empty (the r8 lesson: CORRECTNESS_r08.json was {}).
@@ -16,6 +17,8 @@ artifact ships empty (the r8 lesson: CORRECTNESS_r08.json was {}).
    parquet, sort columns by name (the driver's rule), sort rows, and
    compare against the Spark parquet cell-by-cell (exact for
    non-floats, 1e-9 relative for floats).
+3. Each query's seconds are split into DuckDB oracle execution, Spark
+   dump read and compare; the ten slowest are printed at the end.
 
 Driver-side python env has duckdb+pandas+pyarrow; this never runs on
 the Spark classpath.
@@ -23,6 +26,7 @@ the Spark classpath.
 import json
 import math
 import sys
+import time
 from pathlib import Path
 
 import duckdb
@@ -59,6 +63,32 @@ def cells_equal(a, b):
     return False
 
 
+def compare(spark_df, ora_df):
+    """None when the frames match, else (summary reason, printed detail)."""
+    s, o = norm(spark_df), norm(ora_df)
+    if list(s.columns) != list(o.columns):
+        reason = f"schema {list(s.columns)} vs {list(o.columns)}"
+        return reason, reason
+    if len(s) != len(o):
+        reason = f"rows {len(s)} vs {len(o)}"
+        return reason, reason
+    for col in s.columns:
+        sv, ov = s[col].tolist(), o[col].tolist()
+        for i, (a, b) in enumerate(zip(sv, ov)):
+            if not cells_equal(a, b):
+                return f"value {(col, i, a, b)}", f"col={col} row={i} spark={a!r} oracle={b!r}"
+    return None
+
+
+def timed(seconds, phase, fn):
+    """fn(), its wall seconds added to seconds[phase]."""
+    t0 = time.perf_counter()
+    try:
+        return fn()
+    finally:
+        seconds[phase] += time.perf_counter() - t0
+
+
 def main():
     argv = list(sys.argv[1:])
     json_out = None
@@ -78,44 +108,33 @@ def main():
     oracle_sql = json.loads((out_dir / "oracle_sql.json").read_text())
     names = sorted(n for n in oracle_sql if not only or n in only)
     failures = []
+    seconds = {}
     for name in names:
         spark_dir = out_dir / name
         if not spark_dir.exists():
             failures.append((name, "missing spark dump"))
             print(f"FAIL {name}: spark dump missing")
             continue
+        t = seconds[name] = {"oracle": 0.0, "read": 0.0, "compare": 0.0}
         try:
-            spark_df = con.execute(
-                f"SELECT * FROM read_parquet('{spark_dir}/*.parquet')").df()
-            ora_df = con.execute(oracle_sql[name]).df()
+            spark_df = timed(t, "read", lambda: con.execute(
+                f"SELECT * FROM read_parquet('{spark_dir}/*.parquet')").df())
+            ora_df = timed(t, "oracle", lambda: con.execute(oracle_sql[name]).df())
         except Exception as e:  # noqa: BLE001
             failures.append((name, f"exec error: {e}"))
             print(f"FAIL {name}: {e}")
             continue
-        s, o = norm(spark_df), norm(ora_df)
-        if list(s.columns) != list(o.columns):
-            failures.append((name, f"schema {list(s.columns)} vs {list(o.columns)}"))
-            print(f"FAIL {name}: schema {list(s.columns)} vs {list(o.columns)}")
-            continue
-        if len(s) != len(o):
-            failures.append((name, f"rows {len(s)} vs {len(o)}"))
-            print(f"FAIL {name}: rows {len(s)} vs {len(o)}")
-            continue
-        bad = None
-        for col in s.columns:
-            sv, ov = s[col].tolist(), o[col].tolist()
-            for i, (a, b) in enumerate(zip(sv, ov)):
-                if not cells_equal(a, b):
-                    bad = (col, i, a, b)
-                    break
-            if bad:
-                break
+        bad = timed(t, "compare", lambda: compare(spark_df, ora_df))
         if bad:
-            failures.append((name, f"value {bad}"))
-            print(f"FAIL {name}: col={bad[0]} row={bad[1]} spark={bad[2]!r} oracle={bad[3]!r}")
+            failures.append((name, bad[0]))
+            print(f"FAIL {name}: {bad[1]}")
         else:
-            print(f"ok   {name} ({len(s)} rows)")
+            print(f"ok   {name} ({len(spark_df)} rows)")
 
+    print("\nslowest queries, seconds (total: oracle / read / compare):")
+    for n, t in sorted(seconds.items(), key=lambda kv: -sum(kv[1].values()))[:10]:
+        print(f"  {sum(t.values()):8.2f}: {t['oracle']:.2f} / {t['read']:.2f} / "
+              f"{t['compare']:.2f}  {n}")
     print(f"\n{len(names) - len(failures)}/{len(names)} pass")
     if json_out is not None:
         failed = dict(failures)
@@ -124,6 +143,8 @@ def main():
             "total": len(names),
             "passed": len(names) - len(failures),
             "queries": {n: failed.get(n, "pass") for n in names},
+            "seconds": {n: {k: round(v, 3) for k, v in t.items()}
+                        for n, t in seconds.items()},
         }
         json_out.parent.mkdir(parents=True, exist_ok=True)
         json_out.write_text(json.dumps(summary, indent=1, sort_keys=True) + "\n")
