@@ -11,6 +11,41 @@ import org.apache.spark.sql.SparkSession
   * (region/nation/supplier/part) broadcast instead of shuffling facts.
   */
 object GraftSession {
+  /** Whole-stage codegen settings, shared by [[builder]] and `Verify`.
+    *
+    *  - `maxFields` 256: wide aggregates (128-column minhash signatures)
+    *    stay in codegen.
+    *  - `cache.maxEntries` 8,192: Spark's LRU of compiled generated
+    *    classes (default 100) must hold graft's working set, or every
+    *    repeat of a query batch recompiles its classes with Janino and
+    *    runs them cold, before the JIT has compiled them. Measured
+    *    working sets: about 200 classes for one pass of the eight
+    *    `suite_mix` benchmark queries (at 100 entries each pass
+    *    recompiled about 195 and took 8.2 s instead of 5.0 s; at 200 an
+    *    LRU at the edge of its working set still recompiled about 100),
+    *    and 4,314 distinct classes for one pass over the whole registry.
+    *    The bound is about twice the latter. It costs no metaspace:
+    *    evicted classes pile up there until they are unloaded, and two
+    *    registry passes (`graft.Bench` at sf0.001) ended with 236 MB of
+    *    metaspace in use at this bound against 282 MB at 100.
+    *  - `useIdInClassName` false: AQE numbers whole-stage codegen stages
+    *    in the order their query stages materialize, which varies from
+    *    run to run when independent stages race. With the stage id in
+    *    the class name, the same operator generated a new class body
+    *    (`GeneratedIteratorForCodegenStage7` instead of `…Stage8`) and
+    *    missed the cache: d6 recompiled 4 to 12 classes on about one
+    *    repeat in ten. The cache keys on the body, so without the id
+    *    those bodies are identical.
+    *
+    * The cache is a JVM-wide static: `CodeGenerator` sizes it once, from
+    * the conf of the session that triggers the JVM's first codegen. A
+    * JVM whose first generated class comes from a session built without
+    * these settings keeps Spark's 100 entries for its whole life. */
+  val codegen: Map[String, String] = Map(
+    "spark.sql.codegen.maxFields" -> "256",
+    "spark.sql.codegen.cache.maxEntries" -> "8192",
+    "spark.sql.codegen.useIdInClassName" -> "false")
+
   def builder(appName: String = "graft",
               master: Option[String] = None,
               shufflePartitions: Int = Runtime.getRuntime.availableProcessors): SparkSession.Builder = {
@@ -33,8 +68,7 @@ object GraftSession {
       // zone map and `_stats` sidecars record INT64 columns only) —
       // the Delta/Iceberg modern-encoding posture
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // wide aggregates (128-col minhash signatures) must stay in codegen
-      .config("spark.sql.codegen.maxFields", "256")
+      .config(codegen)
   }
 
   def local(appName: String = "graft-local", cores: Int = Runtime.getRuntime.availableProcessors): SparkSession =

@@ -1,11 +1,14 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Dev utility (guide §1): decompose a query's wall time into
   * DataFrame construction, planning (analysis→executedPlan), and
   * repeated noop executions, so optimization effort lands on the part
-  * that actually costs. Run:
+  * that actually costs. Beside each step it prints the generated
+  * classes compiled and their compile milliseconds, as `n/ms`. Run:
   *   sbt "runMain graft.Profile /root/testdata/sf0.1 32 q59_basket_pairs,a20_schema_drift"
   */
 object Profile {
@@ -20,8 +23,17 @@ object Profile {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect()
+    // generated classes compiled (CodegenMetrics) and Janino's compile
+    // milliseconds (CodeGenerator.compileTime, ns) during each step
+    def compiled(): (Long, Long) =
+      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+    val steps = scala.collection.mutable.ArrayBuffer[String]()
     def t[A](f: => A): (Double, A) = {
-      val t0 = System.nanoTime(); val a = f; ((System.nanoTime() - t0) / 1e9, a)
+      val (n0, ns0) = compiled()
+      val t0 = System.nanoTime(); val a = f; val dt = (System.nanoTime() - t0) / 1e9
+      val (n1, ns1) = compiled()
+      steps += s"${n1 - n0}/${(ns1 - ns0) / 1000000}ms"
+      (dt, a)
     }
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Long, Int)]()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
@@ -34,6 +46,7 @@ object Profile {
     })
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
+      steps.clear()
       val (tBuild, df) = t(fn(spark, sfDir))
       val (tPlan, _) = t(df.queryExecution.executedPlan)
       val execs = (1 to reps).map { r =>
@@ -44,7 +57,8 @@ object Profile {
         te
       }
       println(f"[profile] $name%-28s build=$tBuild%6.2f plan=$tPlan%6.2f " +
-        execs.map(e => f"$e%6.2f").mkString("exec=[", " ", "]"))
+        execs.map(e => f"$e%6.2f").mkString("exec=[", " ", "]") +
+        s" codegen build=${steps(0)} plan=${steps(1)} " + steps.drop(2).mkString("exec=[", " ", "]"))
       // stage breakdown of the LAST (warm) execution
       import scala.jdk.CollectionConverters._
       stages.asScala.toSeq.sortBy(-_._3).take(8).foreach { case (id, nm, dur, nt) =>

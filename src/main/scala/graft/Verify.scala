@@ -17,7 +17,7 @@ object Verify {
       // (tz-aware in pandas) where the historical INT96 read back
       // naive — the encoding upgrade belongs to ENGINE sessions (lake
       // tables gain timestamp zone maps), not to the oracle dump.
-      .config("spark.sql.codegen.maxFields", "256")
+      .config(GraftSession.codegen)
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -1,6 +1,8 @@
 package graft.operators
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.storage.StorageLevel
 
 /** The one memo for artifacts the operator families share across the
@@ -49,9 +51,41 @@ private[graft] object SessionMemo {
 
   /** A shared subplan materialized once: persisted MEMORY_AND_DISK and
     * unpersisted (blocking) on release. Consumers read the columnar
-    * cache instead of re-evaluating the plan at every reference. */
+    * cache instead of re-evaluating the plan at every reference.
+    *
+    * Spark's `CacheManager` is per SparkContext, not per session, and
+    * keys its entries by plan (same result): a second entry, in any
+    * session, that persists an already-cached plan shares the first
+    * one's blocks. So the blocks are unpersisted only when the last
+    * entry holding that plan is released. */
   def frame(spark: SparkSession, dir: String, key: String)(build: => DataFrame): DataFrame =
-    value(spark, dir, key)(build.persist(StorageLevel.MEMORY_AND_DISK))(_.unpersist(blocking = true))
+    value(spark, dir, key)(pin(build))(unpin)
+
+  /** Memo entries holding each cached plan, by (SparkContext,
+    * canonicalized plan): the identity `CacheManager` looks entries up
+    * by. Guarded by itself, so a persist never races the unpersist of
+    * the plan's last holder. */
+  private val holders = scala.collection.mutable.Map[(SparkContext, LogicalPlan), Int]()
+
+  private def cacheId(df: DataFrame): (SparkContext, LogicalPlan) =
+    (df.sparkSession.sparkContext, df.queryExecution.normalized.canonicalized)
+
+  private def pin(df: DataFrame): DataFrame = holders.synchronized {
+    val k = cacheId(df)
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+    holders(k) = holders.getOrElse(k, 0) + 1
+    df
+  }
+
+  private def unpin(df: DataFrame): Unit = holders.synchronized {
+    val k = cacheId(df)
+    val left = holders(k) - 1
+    if (left > 0) holders(k) = left
+    else {
+      holders.remove(k)
+      df.unpersist(blocking = true)
+    }
+  }
 
   /** Release every entry for (session, dataset). */
   def release(spark: SparkSession, dir: String): Unit =

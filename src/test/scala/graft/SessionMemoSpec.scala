@@ -6,6 +6,8 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 
+import org.apache.spark.storage.StorageLevel
+
 import graft.operators._
 
 /** Lifecycle and build properties of the shared-artifact memo. */
@@ -34,6 +36,24 @@ class SessionMemoSpec extends GraftSpec {
     TextOps.release(spark, sfDir)
     val leaked = persisted & mine
     assert(leaked.isEmpty, s"leaked persisted or checkpointed RDDs: $leaked")
+  }
+
+  test("releasing a session whose frames share another session's cached plans keeps the other's blocks") {
+    SessionMemo.release(spark, sfDir)
+    val before = persisted
+    SparkEntry.queries("d6_dedup_minhash")(spark, sfDir).count()
+    val mine = persisted -- before
+    assert(mine.nonEmpty, "expected d6 to persist its shared frames")
+
+    val other = spark.newSession()
+    SparkEntry.queries("d6_dedup_minhash")(other, sfDir).count()
+    SessionMemo.releaseSession(other)
+    assert((mine -- persisted).isEmpty, s"another session's release freed ${mine -- persisted}")
+    assert(DedupOps.sharedShingleHashes(spark, sfDir).storageLevel == StorageLevel.MEMORY_AND_DISK)
+
+    SessionMemo.release(spark, sfDir)
+    val leaked = persisted & mine
+    assert(leaked.isEmpty, s"leaked persisted RDDs: $leaked")
   }
 
   test("releaseSession frees only the named session's entries") {
