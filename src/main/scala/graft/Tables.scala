@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
+import org.apache.hadoop.fs.Path
+import scala.collection.concurrent.TrieMap
 
 /** Loaders for the star-schema test tables (one parquet file per table).
   *
@@ -15,8 +17,56 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** A plain parquet scan of `$dir/$name.parquet`, with the schema
+    * this JVM inferred on an earlier load of the same listing under the
+    * same parquet settings. Spark infers a parquet schema with a
+    * one-task Spark job on every `spark.read.parquet`; a read with the
+    * schema given runs none. */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    load(spark, s"$dir/$name.parquet")._1
+
+  /** What a load learns about a table path: its schema and, per target
+    * parallelism, whether its scan under-splits ([[spread]]). Valid
+    * while `key` holds: the path's listing (names, lengths, mtimes) and
+    * the session's parquet settings, so a table rewritten in place, or
+    * read under settings that change its inferred types, is inferred
+    * again. */
+  private final case class Loaded(key: (Seq[(String, Long, Long)], Seq[(String, String)]),
+                                  schema: StructType,
+                                  underSplit: TrieMap[Int, Boolean])
+
+  private val loaded = TrieMap.empty[String, Loaded]
+
+  /** The session settings that may shape an inferred parquet schema:
+    * every parquet and file-source setting it sets, and case
+    * sensitivity. */
+  private def inferenceSettings(spark: SparkSession): Seq[(String, String)] =
+    spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+        k.startsWith("spark.sql.files.") || k == "spark.sql.caseSensitive"
+    }.sorted
+
+  /** The path's frame and its record; no record when the path cannot
+    * be listed (the read then fails or succeeds as Spark's would). */
+  private def load(spark: SparkSession, path: String): (DataFrame, Option[Loaded]) = {
+    val listing =
+      try {
+        val p = new Path(path)
+        Some(p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p).toSeq
+          .map(st => (st.getPath.getName, st.getLen, st.getModificationTime)).sorted)
+      } catch { case _: java.io.IOException => None }
+    listing.map(l => (l, inferenceSettings(spark))) match {
+      case None => (spark.read.parquet(path), None)
+      case Some(key) => loaded.get(path).filter(_.key == key) match {
+        case Some(rec) => (spark.read.schema(rec.schema).parquet(path), Some(rec))
+        case None =>
+          val df = spark.read.parquet(path)
+          val rec = Loaded(key, df.schema, TrieMap.empty)
+          loaded.put(path, rec)
+          (df, Some(rec))
+      }
+    }
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "nation")
@@ -53,21 +103,6 @@ object Tables {
   def embeddings(spark: SparkSession, dir: String): DataFrame =
     spread(spark, dir, "embeddings", key = null)
 
-  /** Remembers, per (table path, file signature, target parallelism),
-    * whether the scan under-splits — one cheap RDD-partition probe per
-    * table per session lifetime, not per query. The signature
-    * (length, mtime of the path) keeps the decision fresh if the file
-    * is rewritten or regrown within one JVM. */
-  private val spreadCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long, Long, Int), Boolean]
-
-  private def fileSignature(spark: SparkSession, path: String): (Long, Long) =
-    try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
-      (st.getLen, st.getModificationTime)
-    } catch { case _: Throwable => (-1L, -1L) }
-
   /** Spread an under-split table scan to the session's parallelism.
     *
     * Public for compute-heavy consumers (wide distinct aggregates,
@@ -98,12 +133,11 @@ object Tables {
     * to round-robin. */
   def spread(spark: SparkSession, dir: String, name: String,
              key: String): DataFrame = {
-    val df = apply(spark, dir, name)
+    val (df, rec) = load(spark, s"$dir/$name.parquet")
     val target = spark.sparkContext.defaultParallelism
-    val path = s"$dir/$name.parquet"
-    val (len, mtime) = fileSignature(spark, path)
-    val need = spreadCache.getOrElseUpdate((path, len, mtime, target),
-      df.rdd.getNumPartitions < target)
+    // one RDD-partition probe per table listing and target, not per query
+    def probe = df.rdd.getNumPartitions < target
+    val need = rec.fold(probe)(_.underSplit.getOrElseUpdate(target, probe))
     if (!need) df
     else if (key == null) df.repartition(target)
     else df.repartition(target, col(key))

@@ -6,9 +6,12 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.conf.HadoopParquetConfiguration
+import org.apache.parquet.example.data.Group
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.FilterApi
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
@@ -1315,8 +1318,7 @@ private[sources] class GraftCountReplayReader(part: GraftInputPartition,
     // counted like every other footer read in the codebase so the
     // footer-open budget sees the COUNT(*)/empty-projection path too
     ParquetFooters.opens.incrementAndGet()
-    val r = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(part.filePath), conf))
+    val r = ParquetFooters.open(new Path(part.filePath), conf)
     try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum finally r.close()
   }
   private val nullRow: InternalRow =
@@ -1348,11 +1350,12 @@ private[sources] object GraftReaders {
     val filter = FilterCompat.get(
       FilterApi.eq(FilterApi.binaryColumn("file"), Binary.fromString(key)))
     dvParts.foreach { part =>
-      val reader = ParquetReader
-        .builder(new GroupReadSupport(), new Path(part))
-        .withConf(conf)
-        .withFilter(filter)
-        .build()
+      // read options from `conf`: ParquetReader.builder(readSupport, path)
+      // first builds them from a fresh default Configuration
+      val reader = new ParquetReader.Builder[Group](
+          HadoopInputFile.fromPath(new Path(part), conf), new HadoopParquetConfiguration(conf)) {
+        override protected def getReadSupport: ReadSupport[Group] = new GroupReadSupport()
+      }.withFilter(filter).build()
       try {
         var g = reader.read()
         while (g != null) {

@@ -46,7 +46,7 @@ trait TableFormat {
     * DIFFERENT tables never collide. */
   def commit(spark: SparkSession, table: String, df: DataFrame, token: String): Unit
 
-  protected def fsOf(spark: SparkSession, table: String): FileSystem =
+  protected[sources] def fsOf(spark: SparkSession, table: String): FileSystem =
     new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
 }
 
@@ -490,8 +490,7 @@ object CommitLogTableFormat extends TableFormat {
   private def dvSidecarMeta(conf: Configuration, dir: Path): (Long, Option[Set[String]]) = {
     import scala.jdk.CollectionConverters._
     ParquetFooters.dataFiles(dir.getFileSystem(conf), dir).map { p =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(p), conf))
+      val r = ParquetFooters.open(new Path(p), conf)
       try {
         val desc = r.getFooter.getFileMetaData.getSchema.getColumnDescription(Array("file"))
         val blocks = r.getFooter.getBlocks.asScala.toSeq
@@ -1524,8 +1523,7 @@ object CommitLogTableFormat extends TableFormat {
     import scala.jdk.CollectionConverters._
     val fs = dir.getFileSystem(conf)
     ParquetFooters.dataFiles(fs, dir).map { p =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(p), conf))
+      val r = ParquetFooters.open(new Path(p), conf)
       try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum finally r.close()
     }.sum
   }
@@ -1732,12 +1730,8 @@ object CommitLogTableFormat extends TableFormat {
     ParquetFooters.dataFiles(root.getFileSystem(conf), new Path(root, dir)).headOption
       .flatMap { p =>
         // the row-group metadata is most of a footer, and not needed here
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(p), conf),
-          org.apache.parquet.HadoopReadOptions.builder(conf)
-            .withMetadataFilter(
-              org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
-            .build())
+        val r = ParquetFooters.open(new Path(p), conf,
+          org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
         try Option(r.getFooter.getFileMetaData.getKeyValueMetaData
           .get("org.apache.spark.sql.parquet.row.metadata"))
         finally r.close()

@@ -2,6 +2,10 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,14 +17,28 @@ import org.apache.spark.sql.functions._
   * [[ZOrderLayout.pruneCount]] on plain directories. */
 private[graft] object ParquetFooters {
 
-  /** JVM-local diagnostic: how many parquet FOOTERS the engine has
-    * opened (incremented in [[fileColStats]] and the DSv2 COUNT(*)
-    * replay, wherever they run — in local mode that is one JVM, which
-    * is what the footer-open specs need: a pruned read over a
+  /** JVM-local diagnostic: how many data-file footers the engine has
+    * opened for their row groups (incremented in [[fileColStats]] and
+    * the DSv2 COUNT(*) replay, wherever they run — in local mode that
+    * is one JVM, which is what the footer-open specs need: a pruned read over a
     * stats-bearing snapshot opens ZERO data-file footers, and a
     * commit opens each new file's footer once). Not a cluster-wide
     * metric and never read by engine logic. */
   val opens = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Opens `path` for a footer or page read with read options built
+    * from `conf`, the caller's conf. `ParquetFileReader.open(InputFile)`
+    * builds them from a fresh default `Configuration` instead: that
+    * misses every parquet read option the caller's conf sets, and
+    * re-parses Hadoop's default resources on every open. `filter`
+    * selects the footer's row-group metadata. Every footer read of the
+    * lake goes through here; [[fileColStats]] and the COUNT(*) replay
+    * also count theirs in [[opens]]. */
+  def open(path: Path, conf: Configuration,
+           filter: ParquetMetadataConverter.MetadataFilter = ParquetMetadataConverter.NO_FILTER)
+      : ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
+      HadoopReadOptions.builder(conf, path).withMetadataFilter(filter).build())
 
   /** One file's combined footer stats, the unit the pruners evaluate:
     * per-column (min, max, nulls, rows) for INT32/INT64 columns and
@@ -61,8 +79,7 @@ private[graft] object ParquetFooters {
     import org.apache.parquet.schema.LogicalTypeAnnotation.StringLogicalTypeAnnotation
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT32, INT64}
     opens.incrementAndGet()
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf))
+    val reader = open(path, conf)
     val blocks = try reader.getFooter.getBlocks.asScala.toSeq finally reader.close()
     val rows = blocks.map(_.getRowCount).sum
     val chunks = blocks.flatMap(_.getColumns.asScala)

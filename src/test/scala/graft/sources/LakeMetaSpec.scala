@@ -2,7 +2,6 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -88,20 +87,6 @@ class LakeMetaSpec extends graft.GraftSpec {
       fmt.currentSnapshot(spark, t).get.dataDirNames.filterNot(_.endsWith("-y1")), "k3")) ==
       plain)
     assert(fmt.currentSnapshot(spark, t).get.dvName.isEmpty)
-  }
-
-  /** Spark jobs started while `body` runs. */
-  private def jobs(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
-    }
-    org.apache.spark.graftspec.Bus.drain(sc)
-    sc.addSparkListener(l)
-    try { body; org.apache.spark.graftspec.Bus.drain(sc) }
-    finally sc.removeSparkListener(l)
-    n.get
   }
 
   test("lake write-path job budget: erase, upsert, SQL DELETE and the first read after each") {

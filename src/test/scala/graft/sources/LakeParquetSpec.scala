@@ -131,6 +131,25 @@ class LakeParquetSpec extends graft.GraftSpec {
     }
   }
 
+  test("footer opens take their read options from the caller's conf") {
+    val t = Files.createTempDirectory("graft_footer_conf").toString + "/t"
+    spark.range(0L, 50L, 1L, 1).toDF("k").write.parquet(t)
+    val file = new Path(ParquetFooters.dataFiles(new Path(t).getFileSystem(conf), new Path(t)).head)
+    val c = new org.apache.hadoop.conf.Configuration(conf)
+    c.setBoolean(org.apache.parquet.hadoop.ParquetInputFormat.PAGE_VERIFY_CHECKSUM_ENABLED, true)
+    c.set("graft.spec.marker", "caller")
+    val r = ParquetFooters.open(file, c)
+    try {
+      // the reader keeps its options private
+      val field = classOf[ParquetFileReader].getDeclaredField("options")
+      field.setAccessible(true)
+      val options = field.get(r).asInstanceOf[org.apache.parquet.ParquetReadOptions]
+      assert(options.usePageChecksumVerification)
+      assert(options.getProperty("graft.spec.marker") == "caller")
+      assert(r.getFooter.getBlocks.asScala.map(_.getRowCount).sum == 50L)
+    } finally r.close()
+  }
+
   test("compactDirs without clusterBy writes one layout for identically built tables") {
     // uncompressed fixed-width columns give every 100-row file the same
     // length, so the scan's packing order of the files is their order
